@@ -70,8 +70,6 @@ object Bench {
             timings(name) = -1.0
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
         } finally {
-          graft.pipeline.Dedup.releaseCaches()
-          graft.graphx.Analytics.releaseCaches()
           graft.Checkpoints.releaseCaches()
         }
       }

@@ -29,8 +29,6 @@ object BenchOne {
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        graft.pipeline.Dedup.releaseCaches()
-        graft.graphx.Analytics.releaseCaches()
         graft.Checkpoints.releaseCaches()
         (System.nanoTime() - t0) / 1e9
       }.sorted

@@ -29,8 +29,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       finally {
-        graft.pipeline.Dedup.releaseCaches()
-        graft.graphx.Analytics.releaseCaches()
         graft.Checkpoints.releaseCaches()
       }
     }

@@ -5,6 +5,7 @@ import org.apache.spark.graphx.lib.ShortestPaths
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
+import graft.Checkpoints
 import graft.functions.FastHash.md5 // shadows functions.md5 → Md5Fast (r19)
 
 /** GraphX analytics over the RDF edge set — the north star's "GraphX
@@ -15,54 +16,11 @@ import graft.functions.FastHash.md5 // shadows functions.md5 → Md5Fast (r19)
   */
 object Analytics {
 
-  /** Release thunks for every RDD/graph a query persisted (our edge
-    * RDDs plus the GraphX graphs, whose constructors cache their
-    * vertex/edge RDDs internally). Same caller contract as
-    * [[graft.pipeline.Dedup.releaseCaches]]: release once the
-    * returned DataFrames are consumed, never mid-flight.
+  /** Forwards to [[graft.Checkpoints.releaseCaches]]. Its only caller
+    * is the benchmark program (perfbench/src/main/scala/perfbench/Main.scala:168-169);
+    * graft code calls the owner directly.
     */
-  private val released =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[() => Unit]())
-
-  private def track[T](value: T)(release: T => Unit): T = {
-    released.add(() => release(value))
-    value
-  }
-
-  /** Tracked eager localCheckpoints — one shared registry for the
-    * whole library ([[graft.Checkpoints]]); [[releaseCaches]] drains
-    * it along with the graph caches so a harness only needs this one
-    * call for graph workloads.
-    */
-  private def ckpt(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) =
-    graft.Checkpoints.trackedWithHandle(df)
-
-  private def checkpointTracked(df: DataFrame): DataFrame = ckpt(df)._1
-
-  /** Unpersist everything graph queries cached. Long-lived sessions
-    * call this between graph workloads so Pregel's MEMORY_AND_DISK
-    * blocks don't accumulate.
-    *
-    * After the tracked releases, sweep the context for remaining
-    * graphx-typed RDDs: GraphX algorithms cache intermediate
-    * vertex/edge RDDs they never expose (e.g. Pregel's per-iteration
-    * graphs), so a sweep is the only complete release. Only GraphX
-    * classes are swept — SQL/DataFrame caches are untouched.
-    */
-  def releaseCaches(): Unit = released.synchronized {
-    graft.Checkpoints.releaseCaches() // graph loops checkpoint there
-    val it = released.iterator()
-    while (it.hasNext) { it.next().apply(); it.remove() }
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach { s =>
-        s.sparkContext.getPersistentRDDs.values
-          .filter(r => r.getClass.getName.startsWith("org.apache.spark.graphx") ||
-            r.name == "VertexRDD" || r.name == "EdgeRDD")
-          .foreach(_.unpersist(blocking = false))
-      }
-  }
+  def releaseCaches(): Unit = Checkpoints.releaseCaches()
 
   /** (vertices(id,uri), edges RDD) from a (src,dst) DataFrame.
     *
@@ -83,9 +41,8 @@ object Analytics {
     // persist before the sizing count — the count and the graph build
     // would otherwise each run the full edge derivation; repartition
     // (not coalesce) when growing, since coalesce can only shrink
-    val edgeRdd0 = track(e.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
-      _.unpersist(blocking = false))
+    val edgeRdd0 = Checkpoints.persisted(
+      e.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1)))
     val nParts = math.max(4, math.min(
       spark.sparkContext.defaultParallelism,
       (edgeRdd0.count() / 500000L).toInt + 1))
@@ -95,7 +52,7 @@ object Analytics {
       else r
     val vertRdd = resize(verts.rdd.map(r => (r.getLong(0), r.getString(1))))
     val edgeRdd = resize(edgeRdd0)
-    (verts, track(Graph(vertRdd, edgeRdd))(_.unpersist(blocking = false)))
+    (verts, Checkpoints.track(Graph(vertRdd, edgeRdd))(_.unpersist(_)))
   }
 
   /** Per-URI in/out degree (missing side = 0). */
@@ -115,28 +72,12 @@ object Analytics {
   def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
     val (verts, g) = build(spark, edges)
     val cc = spark.createDataFrame(
-      track(g.connectedComponents())(_.unpersist(blocking = false))
+      Checkpoints.track(g.connectedComponents())(_.unpersist(_))
         .vertices).toDF("id", "comp_id")
     verts.join(cc, Seq("id"))
       .groupBy(col("comp_id"))
       .agg(min(col("uri")).as("comp"), count(lit(1)).as("size"))
       .select(col("comp"), col("size"))
-  }
-
-  /** [[connectedComponents]]'s DataFrame twin (same output contract:
-    * component named by its min URI, sized) over the checkpointed
-    * hash-min loop [[componentsByIdDF]] — the r17 CC-audit candidate.
-    */
-  def connectedComponentsDF(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val verts = edges.select(col("src").as("uri"))
-      .unionAll(edges.select(col("dst").as("uri"))).distinct()
-      .select(xxhash64(col("uri")).as("id"), col("uri"))
-    val comp = componentsByIdDF(spark, edges.select(
-      xxhash64(col("src")).as("src"), xxhash64(col("dst")).as("dst")))
-    verts.join(comp, Seq("id"))
-      .groupBy(col("comp"))
-      .agg(min(col("uri")).as("c"), count(lit(1)).as("size"))
-      .select(col("c").as("comp"), col("size"))
   }
 
   /** Connected components over NUMERIC-id edges (src, dst): returns
@@ -146,11 +87,9 @@ object Analytics {
     * the canonical representative.
     */
   def componentsById(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val edgeRdd0 = track(edges
+    val edgeRdd0 = Checkpoints.persisted(edges
       .select(col("src").cast("long"), col("dst").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
-      _.unpersist(blocking = false))
+      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1)))
     // size partitions to the graph like [[build]] does (1 per ~500k
     // edges, floor 4): the input frame often inherits a WIDE upstream
     // layout (a filtered slice of the spread cached store arrives with
@@ -163,67 +102,9 @@ object Analytics {
     val edgeRdd =
       if (nParts < edgeRdd0.getNumPartitions) edgeRdd0.coalesce(nParts)
       else edgeRdd0
-    val g = track(Graph.fromEdges(edgeRdd, 0))(_.unpersist(blocking = false))
-    val cc = track(g.connectedComponents())(_.unpersist(blocking = false))
+    val g = Checkpoints.track(Graph.fromEdges(edgeRdd, 0))(_.unpersist(_))
+    val cc = Checkpoints.track(g.connectedComponents())(_.unpersist(_))
     spark.createDataFrame(cc.vertices).toDF("id", "comp")
-  }
-
-  /** Rounds the most recent [[componentsByIdDF]] call ran to reach
-    * its fixpoint (diagnostics for the CC audit).
-    */
-  @volatile var lastCcRounds: Int = 0
-
-  /** [[componentsById]]'s DataFrame twin: synchronous hash-min label
-    * propagation as a checkpointed DataFrame loop (the [[kCore]]
-    * idiom) instead of GraphX Pregel. Each round is ONE keyed
-    * join+groupBy (neighbor-minimum messages) and a least() merge;
-    * convergence is an exact changed-row count over the two
-    * materialized checkpoints. Rounds = graph diameter — the same
-    * bound as Pregel's hash-min, but without the RDD conversion, the
-    * Graph build, or Pregel's per-iteration caching; AQE re-plans
-    * each round as the frontier shrinks. Built for the r17 CC audit
-    * (GraphX vs DataFrame at sf1); output contract identical to
-    * [[componentsById]]: (id, comp = component's minimum vertex id).
-    */
-  def componentsByIdDF(spark: SparkSession, edges: DataFrame,
-                       maxRounds: Int = 200): DataFrame = {
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val sym = e0.unionAll(
-      e0.select(col("dst").as("src"), col("src").as("dst")))
-    var (msgEdges, _) = ckpt(sym)
-    var (comp, _) = ckpt(
-      msgEdges.select(col("src").as("id"))
-        .unionAll(msgEdges.select(col("dst").as("id")))
-        .distinct().withColumn("comp", col("id")))
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val msgs = msgEdges.join(comp, msgEdges("src") === comp("id"))
-        .groupBy(msgEdges("dst").as("id"))
-        .agg(min(col("comp")).as("m"))
-      val (next, _) = ckpt(comp.as("c")
-        .join(msgs.as("n"), Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("c.comp"), coalesce(col("n.m"), col("c.comp")))
-            .as("comp")))
-      // labels only ever DECREASE: a changed row is next < cur — the
-      // count reads two just-materialized checkpoints
-      converged = next.as("n").join(comp.as("c"), Seq("id"))
-        .filter(col("n.comp") < col("c.comp")).isEmpty
-      comp = next
-      rounds += 1
-    }
-    lastCcRounds = rounds
-    // maxRounds is a safety valve, not an output mode: hash-min labels
-    // are only correct AT the fixpoint, so exiting the loop un-converged
-    // must be an error, not a silently-truncated answer that the
-    // documented componentsById contract can't distinguish (lastCcRounds
-    // alone can't tell converged-at-max from truncated).
-    if (!converged)
-      throw new IllegalStateException(
-        s"componentsByIdDF did not converge in $maxRounds rounds " +
-          "(graph diameter exceeds maxRounds); raise maxRounds")
-    comp
   }
 
   /** Peel rounds the most recent [[kCore]] call actually ran
@@ -262,7 +143,7 @@ object Analytics {
     // round — the peel loop's edge relation never re-shuffles.
     // Explicit count (REPARTITION_BY_NUM) so AQE can't coalesce the
     // partitioning out of alignment with later rounds.
-    var (cur, curRdd) = ckpt(edges.select(col("src"), col("dst"))
+    var (cur, curRdd) = Checkpoints.trackedWithHandle(edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
         col("src")))
@@ -272,7 +153,7 @@ object Analytics {
     while (!converged && rounds < maxRounds) {
       val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src"))
-      val (next, nextRdd) = ckpt(cur
+      val (next, nextRdd) = Checkpoints.trackedWithHandle(cur
         .join(keep, Seq("src"), "left_semi")
         .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst")))
@@ -329,11 +210,11 @@ object Analytics {
     */
   def stronglyConnectedComponents(edges: DataFrame): DataFrame = {
     val typed = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    var (rem, remRdd) = ckpt(typed
+    var (rem, remRdd) = Checkpoints.trackedWithHandle(typed
       .filter(col("src") =!= col("dst")).distinct())
     // vertex set from the UNFILTERED edges: a vertex whose only edges
     // are self-loops still owns a singleton SCC
-    var (verts, vertsRdd) = ckpt(typed.select(col("src").as("v"))
+    var (verts, vertsRdd) = Checkpoints.trackedWithHandle(typed.select(col("src").as("v"))
       .unionAll(typed.select(col("dst").as("v"))).distinct())
     var nVerts = verts.count()
     val pieces = scala.collection.mutable.ListBuffer.empty[DataFrame]
@@ -342,14 +223,15 @@ object Analytics {
         .getDecimal(0)
     while (nVerts > 0) {
       // (1) forward max flood: color(v) = max id reaching v
-      var (c, cRdd) = ckpt(verts.select(col("v"), col("v").as("color")))
+      var (c, cRdd) = Checkpoints.trackedWithHandle(
+        verts.select(col("v"), col("v").as("color")))
       var csum = colorSum(c)
       var flooded = false
       while (!flooded) {
         val msgs = rem
           .join(c.select(col("v").as("src"), col("color")), Seq("src"))
           .groupBy(col("dst")).agg(max(col("color")).as("mc"))
-        val (next, nextRdd) = ckpt(c
+        val (next, nextRdd) = Checkpoints.trackedWithHandle(c
           .join(msgs.select(col("dst").as("v"), col("mc")), Seq("v"), "left_outer")
           .select(col("v"), greatest(col("color"), coalesce(col("mc"), col("color")))
             .as("color")))
@@ -359,12 +241,13 @@ object Analytics {
         flooded = s2.compareTo(csum) == 0; csum = s2
       }
       // (2) reverse frontier walk from roots within each color class
-      var (reached, reachedRdd) = ckpt(c.filter(col("v") === col("color")))
+      var (reached, reachedRdd) = Checkpoints.trackedWithHandle(
+        c.filter(col("v") === col("color")))
       var frontier = reached
       var frontierRdd = reachedRdd
       var walked = false
       while (!walked) {
-        val (step, stepRdd) = ckpt(rem
+        val (step, stepRdd) = Checkpoints.trackedWithHandle(rem
           .join(frontier.select(col("v").as("dst"), col("color")), Seq("dst"))
           .select(col("src").as("v"), col("color"))
           .join(c.withColumnRenamed("color", "vc"), Seq("v"))
@@ -378,21 +261,21 @@ object Analytics {
           stepRdd.unpersist(blocking = false)
           frontier = reached; frontierRdd = reachedRdd
         } else {
-          val (next, nextRdd) = ckpt(reached.unionAll(step))
+          val (next, nextRdd) = Checkpoints.trackedWithHandle(reached.unionAll(step))
           reachedRdd.unpersist(blocking = false)
           reached = next; reachedRdd = nextRdd
           frontier = step; frontierRdd = stepRdd
         }
       }
       // (3) label removed SCCs by min member and peel them off
-      val (piece, _) = ckpt(reached
+      val (piece, _) = Checkpoints.trackedWithHandle(reached
         .join(reached.groupBy(col("color")).agg(min(col("v")).as("comp")),
           Seq("color"))
         .select(col("v"), col("comp")))
       pieces += piece
-      val (nextVerts, nvRdd) = ckpt(
+      val (nextVerts, nvRdd) = Checkpoints.trackedWithHandle(
         verts.join(reached, Seq("v"), "left_anti"))
-      val (nextRem, nrRdd) = ckpt(rem
+      val (nextRem, nrRdd) = Checkpoints.trackedWithHandle(rem
         .join(reached.select(col("v").as("src")), Seq("src"), "left_anti")
         .join(reached.select(col("v").as("dst")), Seq("dst"), "left_anti")
         .select(col("src"), col("dst")))
@@ -419,19 +302,17 @@ object Analytics {
         greatest(col("sid"), col("did")).as("did"))
       .filter(col("sid") =!= col("did"))
       .distinct()
-    val canonRdd = track(canon.rdd.map(r => (r.getLong(0), r.getLong(1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
-      _.unpersist(blocking = false))
+    val canonRdd = Checkpoints.persisted(
+      canon.rdd.map(r => (r.getLong(0), r.getLong(1))))
     val nParts = math.max(4, math.min(
       spark.sparkContext.defaultParallelism,
       (canonRdd.count() / 500000L).toInt + 1))
     val sized =
       if (nParts < canonRdd.getNumPartitions) canonRdd.coalesce(nParts)
       else canonRdd
-    val g = track(Graph.fromEdgeTuples(sized, 1)
-      .partitionBy(PartitionStrategy.RandomVertexCut))(
-      _.unpersist(blocking = false))
-    val perVertex = track(g.triangleCount())(_.unpersist(blocking = false))
+    val g = Checkpoints.track(Graph.fromEdgeTuples(sized, 1)
+      .partitionBy(PartitionStrategy.RandomVertexCut))(_.unpersist(_))
+    val perVertex = Checkpoints.track(g.triangleCount())(_.unpersist(_))
       .vertices.map(_._2.toLong)
     spark.createDataFrame(perVertex.map(Tuple1.apply)).toDF("t")
       // empty graph => sum is NULL; the count of triangles is 0
@@ -457,15 +338,16 @@ object Analytics {
     // table — the edge relation never re-shuffles (r19, guide §2.4
     // "two operations keyed the same way share one exchange"; the
     // GraphX posture — edges stay put, labels move — in DataFrame form)
-    val und = checkpointTracked(edges.select(col("src"), col("dst"))
+    val und = Checkpoints.tracked(edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       // explicit count (REPARTITION_BY_NUM): AQE never coalesces it,
       // so the checkpointed partitioning provably matches the
       // per-round join's requirement
       .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
         col("dst")))
-    var (lab, labRdd) = ckpt(und.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("label")))
+    var (lab, labRdd) = Checkpoints.trackedWithHandle(
+      und.select(col("src").as("v")).distinct()
+        .select(col("v"), col("v").as("label")))
     for (_ <- 1 to rounds) {
       val counts = und
         .join(lab.select(col("v").as("dst"), col("label")), Seq("dst"))
@@ -473,7 +355,7 @@ object Analytics {
       val next = counts.groupBy(col("src"))
         .agg(max(struct(col("n"), (-col("label")).as("neg"))).as("best"))
         .select(col("src").as("v"), (-col("best.neg")).as("label"))
-      val (n2, r2) = ckpt(next)
+      val (n2, r2) = Checkpoints.trackedWithHandle(next)
       labRdd.unpersist(blocking = false)
       lab = n2; labRdd = r2
     }
@@ -496,7 +378,7 @@ object Analytics {
     * cannot move the hash.
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val g = graft.Checkpoints.tracked(edges
+    val g = Checkpoints.tracked(edges
       .join(labels.select(col("v").as("src"), col("label").as("l_src")),
         "src")
       .join(labels.select(col("v").as("dst"), col("label").as("l_dst")),
@@ -533,14 +415,12 @@ object Analytics {
         greatest(col("sid"), col("did")).as("did"))
       .filter(col("sid") =!= col("did"))
       .distinct()
-    val canonRdd = track(canon.rdd.map(r => (r.getLong(0), r.getLong(1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
-      _.unpersist(blocking = false))
-    val g = track(Graph.fromEdgeTuples(canonRdd, 1)
-      .partitionBy(PartitionStrategy.RandomVertexCut))(
-      _.unpersist(blocking = false))
+    val canonRdd = Checkpoints.persisted(
+      canon.rdd.map(r => (r.getLong(0), r.getLong(1))))
+    val g = Checkpoints.track(Graph.fromEdgeTuples(canonRdd, 1)
+      .partitionBy(PartitionStrategy.RandomVertexCut))(_.unpersist(_))
     val pv = spark.createDataFrame(
-      track(g.triangleCount())(_.unpersist(blocking = false)).vertices)
+      Checkpoints.track(g.triangleCount())(_.unpersist(_)).vertices)
       .toDF("id", "t")
     verts.join(pv, Seq("id"))
       .filter(col("t") > 0)
@@ -571,18 +451,18 @@ object Analytics {
     */
   def pageRank(spark: SparkSession, edges: DataFrame, iters: Int,
                scale: Long = 1000000000L): DataFrame = {
-    val e = checkpointTracked(edges.select(col("src"), col("dst")))
+    val e = Checkpoints.tracked(edges.select(col("src"), col("dst")))
     // vertex set partitioned by its join key: the per-iteration
     // verts⋈msgs left join then lines up with the message
     // aggregation's own hash partitioning — neither side re-shuffles
     // inside the loop (r19, guide §2.4)
-    val verts = checkpointTracked(e.select(col("src").as("uri"))
+    val verts = Checkpoints.tracked(e.select(col("src").as("uri"))
       .unionAll(e.select(col("dst").as("uri"))).distinct()
       .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
         col("uri")))
     // edge+outdeg relation partitioned by src: each iteration's
     // withDeg⋈rank join moves only the vertex-scale rank table
-    val withDeg = checkpointTracked(e.join(
+    val withDeg = Checkpoints.tracked(e.join(
       e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), Seq("src"))
       .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
         col("src")))
@@ -593,11 +473,12 @@ object Analytics {
         .join(rank.select(col("uri").as("src"), col("rank")), Seq("src"))
         .select(col("dst").as("uri"), expr("rank div outdeg").as("c"))
         .groupBy(col("uri")).agg(sum(col("c")).as("msum"))
-      val (next, nextRdd) = ckpt(verts.join(msgs, Seq("uri"), "left_outer")
-        .select(col("uri"),
-          (lit(scale * 15 / 100) +
-            expr("(coalesce(msum, 0L) div 100) * 85 " +
-              "+ ((coalesce(msum, 0L) % 100) * 85) div 100")).as("rank")))
+      val (next, nextRdd) = Checkpoints.trackedWithHandle(
+        verts.join(msgs, Seq("uri"), "left_outer")
+          .select(col("uri"),
+            (lit(scale * 15 / 100) +
+              expr("(coalesce(msum, 0L) div 100) * 85 " +
+                "+ ((coalesce(msum, 0L) % 100) * 85) div 100")).as("rank")))
       if (rankRdd != null) rankRdd.unpersist(blocking = false)
       rank = next; rankRdd = nextRdd
     }
@@ -612,7 +493,7 @@ object Analytics {
     val (verts, g) = build(spark, edges, undirected = true)
     val landmarks = sources.select(xxhash64(col("uri")).as("id"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    val sp = track(ShortestPaths.run(g, landmarks))(_.unpersist(blocking = false))
+    val sp = Checkpoints.track(ShortestPaths.run(g, landmarks))(_.unpersist(_))
       .vertices
       .flatMap { case (id, m) => if (m.isEmpty) None else Some((id, m.values.min)) }
     val dists = spark.createDataFrame(sp).toDF("id", "dist")
@@ -743,15 +624,15 @@ object Analytics {
     // — un-checkpointed, every reference re-derives the caller's edge
     // expression (for the co-order graph a lineitem self-join +
     // distinct), so one query paid it ~5×.
-    val e = checkpointTracked(canonicalUndirected(edges))
+    val e = Checkpoints.tracked(canonicalUndirected(edges))
     val adj = e.select(col("src").as("v"), col("dst").as("w"))
       .union(e.select(col("dst").as("v"), col("src").as("w")))
-    val deg = checkpointTracked(
+    val deg = Checkpoints.tracked(
       adj.groupBy(col("v")).agg(count(lit(1)).as("deg")))
     val degW = deg.select(col("v").as("mw"), col("deg").as("degw"))
     val gate = pricedWedgeCap(degW, wedgeBudget, "commonNeighbors")
     val adjF = spreadForWedgeJoin(
-      checkpointTracked(adj.join(degW.filter(col("degw") <= gate.cap),
+      Checkpoints.tracked(adj.join(degW.filter(col("degw") <= gate.cap),
         col("w") === col("mw"))
       .select(col("v"), col("mw"))))
     // the top-k heap depends only on (cn, u, v), so the endpoint-degree
@@ -832,10 +713,10 @@ object Analytics {
     // gate's pricing ACTION + the capped-adjacency join), capped
     // adjacency (self-joined). Un-checkpointed, one query re-derived
     // the caller's edge expression ~5×.
-    val e = checkpointTracked(canonicalUndirected(edges))
+    val e = Checkpoints.tracked(canonicalUndirected(edges))
     val adj = e.select(col("src").as("v"), col("dst").as("w"))
       .union(e.select(col("dst").as("v"), col("src").as("w")))
-    val degW = checkpointTracked(
+    val degW = Checkpoints.tracked(
       adj.groupBy(col("w")).agg(count(lit(1)).as("degw"))
         .withColumnRenamed("w", "mw"))
     // candidate-volume gate ([[pricedWedgeCap]]): for RA specifically
@@ -851,7 +732,7 @@ object Analytics {
     // fixes the measured AQE 2-task coalesce without pinning the
     // checkpoint layout.)
     val adjF = spreadForWedgeJoin(
-      checkpointTracked(adj.join(degW.filter(col("degw") <= gate.cap),
+      Checkpoints.tracked(adj.join(degW.filter(col("degw") <= gate.cap),
         col("w") === col("mw"))
       .select(col("v"), col("mw"), col("degw"))))
     if (gate.packIds) {
@@ -905,7 +786,7 @@ object Analytics {
     // the adjacency feeds the degree fold AND the join probe — 2·|E|
     // materialized once instead of deriving the caller's edge
     // expression per reference (r19)
-    val adj = checkpointTracked(
+    val adj = Checkpoints.tracked(
       edges.select(col("src").as("v"), col("dst").as("w"))
         .union(edges.select(col("dst").as("v"), col("src").as("w"))))
     val degW = adj.groupBy(col("w")).agg(count(lit(1)).as("degw"))
@@ -927,7 +808,7 @@ object Analytics {
   def reciprocity(edges: DataFrame): DataFrame = {
     // three consumers (count, semi-join probe, semi-join build) — one
     // materialization (r19)
-    val e = checkpointTracked(
+    val e = Checkpoints.tracked(
       edges.select(col("src"), col("dst")).distinct())
     val recip = e.join(
       e.select(col("dst").as("src"), col("src").as("dst")),
@@ -955,7 +836,7 @@ object Analytics {
     // the adjacency feeds w1 plus two walk-recurrence joins — one
     // materialization instead of ~6 derivations of the caller's edge
     // expression (r19)
-    val adj = checkpointTracked(
+    val adj = Checkpoints.tracked(
       edges.select(col("src").as("v"), col("dst").as("w"))
         .union(edges.select(col("dst").as("v"), col("src").as("w"))))
     val w1 = adj.groupBy(col("v")).agg(count(lit(1)).as("w1"))
@@ -990,7 +871,7 @@ object Analytics {
     * full md5 of distinct inputs).
     */
   def walkSample(edges: DataFrame, starts: DataFrame, steps: Int = 3): DataFrame = {
-    val bi = checkpointTracked(
+    val bi = Checkpoints.tracked(
       edges.select(col("src"), col("dst"))
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
@@ -1029,7 +910,7 @@ object Analytics {
   def hits(edges: DataFrame, k: Int = 20): DataFrame = {
     // reused by three passes → materialize once (the §4 checkpoint
     // rule; recomputing the distinct edge derivation 3× is the trap)
-    val e = checkpointTracked(
+    val e = Checkpoints.tracked(
       edges.select(col("src"), col("dst")))
     val a1 = e.groupBy(col("dst")).agg(count(lit(1)).as("a1"))
     val h1 = e.join(a1, "dst")
@@ -1070,15 +951,15 @@ object Analytics {
   def jaccardLinkPred(edges: DataFrame, k: Int = 20,
                       wedgeBudget: Long = 10000000L): DataFrame = {
     // shared-relation checkpoints — see [[commonNeighbors]] (r19)
-    val e = checkpointTracked(canonicalUndirected(edges))
+    val e = Checkpoints.tracked(canonicalUndirected(edges))
     val adj = e.select(col("src").as("v"), col("dst").as("w"))
       .union(e.select(col("dst").as("v"), col("src").as("w")))
-    val deg = checkpointTracked(
+    val deg = Checkpoints.tracked(
       adj.groupBy(col("v")).agg(count(lit(1)).as("deg")))
     val degW = deg.select(col("v").as("mw"), col("deg").as("degw"))
     val gate = pricedWedgeCap(degW, wedgeBudget, "jaccardLinkPred")
     val adjF = spreadForWedgeJoin(
-      checkpointTracked(adj.join(degW.filter(col("degw") <= gate.cap),
+      Checkpoints.tracked(adj.join(degW.filter(col("degw") <= gate.cap),
         col("w") === col("mw"))
       .select(col("v"), col("mw"))))
     // unlike commonNeighbors, the jaccard ORDER depends on the degree
@@ -1134,9 +1015,9 @@ object Analytics {
     */
   def richClub(edges: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = checkpointTracked(edges.select(col("src"), col("dst")).distinct())
+    val e = Checkpoints.tracked(edges.select(col("src"), col("dst")).distinct())
     val adj = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
-    val deg = checkpointTracked(
+    val deg = Checkpoints.tracked(
       adj.groupBy(col("v")).agg(count(lit(1)).as("deg")))
     // vertices with deg > κ: reverse cumulative of the degree histogram
     val degHist = deg.groupBy(col("deg")).agg(count(lit(1)).as("nv"))

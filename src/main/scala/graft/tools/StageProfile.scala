@@ -27,8 +27,6 @@ object StageProfile {
     def once(): Unit = {
       graft.SparkEntry.queries(key)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      graft.pipeline.Dedup.releaseCaches()
-      graft.graphx.Analytics.releaseCaches()
       graft.Checkpoints.releaseCaches()
     }
     (1 to warmups).foreach(_ => once())

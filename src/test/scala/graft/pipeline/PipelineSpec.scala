@@ -701,7 +701,7 @@ class PipelineSpec extends AnyFunSuite {
       // monotone: a looser budget never picks a WIDER band
       val loose = Dedup.adaptiveBandBits(coded, 48, 1000L)
       assert(loose <= tight)
-    } finally Dedup.releaseCaches()
+    } finally graft.Checkpoints.releaseCaches()
   }
 
   test("anomalyDays flags only the spiked day") {
