@@ -50,12 +50,19 @@ object ByteSums {
       }
       sum
     } else {
-      val cps = codePoints(str)
-      var i = 0
-      while (i < win) {
-        val pos = start + i // 0-based code-point index
-        if (pos >= 0 && pos < cps.length) sum += cps(pos.toInt)
-        i += 1
+      // 0-based code-point range of the window, clipped at the front;
+      // substring walks lead bytes up to its end (as `substr` does)
+      // and only the window's code points are decoded
+      val lo = math.min(math.max(start, 0L), Int.MaxValue.toLong).toInt
+      val hi = math.min(start + win, Int.MaxValue.toLong).toInt
+      if (lo < hi) {
+        val w = str.substring(lo, hi).toString
+        var ci = 0
+        while (ci < w.length) {
+          val cp = w.codePointAt(ci)
+          sum += cp
+          ci += Character.charCount(cp)
+        }
       }
       sum
     }

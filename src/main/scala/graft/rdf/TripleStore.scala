@@ -11,9 +11,16 @@ import org.apache.spark.storage.StorageLevel
   * Cluster posture: at 100 TB the equivalent is a parquet table
   * written `partitionBy("p")` (vertical partitioning a la S2RDF) and
   * bucketed by `s`, so constant-predicate patterns prune partitions
-  * and subject-subject joins co-locate; in-process we persist the
-  * derived view instead, which gives the same "derive once, scan
-  * columnar many times" shape.
+  * and subject-subject joins co-locate. In-process the store takes the
+  * same shape in one directory: the derivation is written once as
+  * parquet clustered by predicate, and the cached read-back of those
+  * files is what every query scans. A frame over the store carries a
+  * 2-node analyzed plan (coalesce over the file relation) instead of
+  * the derivation's ~55, and its cached buffers a few-RDD lineage
+  * ending at the file scan instead of ~40 with unions and a shuffle,
+  * so compile, planning, explain rendering and per-task
+  * deserialization stay small. A lost cached block is re-read from
+  * the files, not re-derived.
   */
 object TripleStore {
 
@@ -28,30 +35,49 @@ object TripleStore {
       _ => scala.collection.concurrent.TrieMap.empty[String, DataFrame])
   }
 
-  def triples(spark: SparkSession, sfDir: String): DataFrame =
-    sessionCache(spark).getOrElseUpdate(sfDir, TripleStats.register(
-      // coalesce the union to the session's core count BEFORE caching
-      // (r19): the spread source scans (Tables.loadSpread) make each
-      // union leg defaultParallelism-wide, so the raw union is
-      // legs×cores partitions — the cached store then hands every
-      // downstream scan (and the GraphX edge derivations) hundreds of
-      // tiny-task partitions, which measured a 2-12× regression on the
-      // CC-family keys. Coalesce is NARROW (no wide-string shuffle —
-      // the thing this build deliberately avoids): the triple explode
-      // still computes cores-wide, each cached partition just folds
-      // ~legs source slices. On a cluster (partitioned parquet store)
-      // this path isn't used; coalesce never grows a partition count.
-      // an RDF graph is a SET of triples: duplicate source rows (they
-      // exist — sf0.001 has a duplicated lineitem quad) must not yield
-      // duplicate triples. tpchTriplesSet guarantees that WITHOUT a
-      // distinct over the exploded relation: only the (tiny) quad-dup
-      // slice pays a triple-level distinct, and the narrow source
-      // repartition inside it spreads the cached bulk evenly — the
-      // wide-string distinct shuffle this replaces was ~85% of the
-      // store build time.
-      RdfModel.tpchTriplesSet(spark, sfDir)
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .persist(StorageLevel.MEMORY_AND_DISK)))
+  def triples(spark: SparkSession, sfDir: String): DataFrame = {
+    val c = sessionCache(spark)
+    // one build per (session, sfDir): TrieMap.getOrElseUpdate may run
+    // its body twice under a race, and two builds would write the same
+    // directory
+    c.getOrElse(sfDir, c.synchronized(
+      c.getOrElseUpdate(sfDir, buildStore(spark, sfDir))))
+  }
+
+  /** Derive once, write as parquet, serve the cached read-back.
+    *
+    * The write clusters rows by predicate within each file (`coalesce`
+    * then `sortWithinPartitions`, both narrow: the wide string rows are
+    * never shuffled), so the cached column batches carry tight min/max
+    * stats on `p` and a constant-predicate pattern skips most of them.
+    * The read-back is coalesced to the session's core count before
+    * caching (r19): the cached partition count splits every
+    * downstream scan and GraphX edge derivation, and hundreds of
+    * tiny-task partitions measured a 2-12× regression on the CC-family
+    * keys. An RDF graph is a SET of triples;
+    * [[RdfModel.tpchTriplesSet]] guarantees that without a distinct
+    * over the exploded relation.
+    */
+  private def buildStore(spark: SparkSession, sfDir: String): DataFrame = {
+    val cores = spark.sparkContext.defaultParallelism
+    val dir = storeDir(spark, sfDir)
+    reapOnExit(dir)
+    RdfModel.tpchTriplesSet(spark, sfDir)
+      .coalesce(cores).sortWithinPartitions("p")
+      .write.mode("overwrite").parquet(dir.getAbsolutePath)
+    TripleStats.register(spark.read.parquet(dir.getAbsolutePath)
+      .coalesce(cores).persist(StorageLevel.MEMORY_AND_DISK))
+  }
+
+  /** The store's files: process- and session-unique like the layouts
+    * below, and named `graft_triples_<pid>_…` so a killed JVM's copy is
+    * reaped by [[sweepStaleScratch]]; the `_store_` infix keeps it
+    * apart from the `graft_pstore_` partitioned layout.
+    */
+  private def storeDir(spark: SparkSession, sfDir: String): java.io.File =
+    new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_triples_${scratchTag(spark)}_store_" +
+        sfDir.replaceAll("[^A-Za-z0-9.]", "_"))
 
   /** Dimension-only slice (no lineitem facts) — a filter over the
     * shared cached relation, not a second materialization. Cached as
@@ -63,15 +89,26 @@ object TripleStore {
       TripleStats.register(triples(spark, sfDir)
         .filter(!org.apache.spark.sql.functions.col("s").startsWith("line:"))))
 
-  /** Drop the cached in-memory triple relation for (session, sfDir).
-    * Bench warmup materializes the parquet layouts — which derives
-    * the store as a side effect — then calls this, so the
+  /** Drop the triple store for (session, sfDir): its cache and its
+    * files. Bench warmup materializes the parquet layouts — which
+    * derives the store as a side effect — then calls this, so the
     * store-build key still measures the cold derivation instead of a
-    * cache read; the layout DataFrames (parquet-backed) are
-    * unaffected.
+    * cache read. The layouts have their own files and stay; the
+    * dimension slice is a filter over the store, so it goes first and
+    * the next call re-derives it over the next store.
     */
-  def evictTriples(spark: SparkSession, sfDir: String): Unit =
-    sessionCache(spark).remove(sfDir).foreach(_.unpersist(blocking = false))
+  def evictTriples(spark: SparkSession, sfDir: String): Unit = {
+    val c = sessionCache(spark)
+    c.synchronized {
+      c.remove("dim:" + sfDir)
+      c.remove(sfDir).foreach { df =>
+        df.unpersist(blocking = true)
+        val dir = storeDir(spark, sfDir)
+        rmTree(dir)
+        reapList.remove(dir): Unit
+      }
+    }
+  }
 
   /** The cluster layout made concrete: the triple relation as parquet
     * partitioned by predicate (vertical partitioning à la S2RDF).

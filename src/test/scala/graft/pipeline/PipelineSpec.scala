@@ -664,6 +664,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(w == Set((0L, 32L * 97), (1L, 32L * 97)))
   }
 
+  test("audio window energy on a non-ASCII payload agrees with ascii(substr(...))") {
+    // 2-, 3- and 4-byte UTF-8 code points (the last a surrogate pair
+    // in a Java string) between ASCII bytes: the kernel's non-ASCII
+    // path must give the HOF tree's value for every window, including
+    // windows that run past the end of the payload
+    val d = docs(3L -> (("aé€\uD834\uDD1E" * 12) + "zz"))
+    val hof = "aggregate(sequence(s + 1, s + 32), 0L, " +
+      "(acc, q) -> acc + ascii(substr(text, q, 1)))"
+    val w = d.select(col("text"),
+        explode(sequence(lit(0), length(col("text")) + 2)).as("s"))
+      .select(col("s"),
+        graft.functions.ByteSums.byteWindowSum(col("text"), col("s"), 32).as("got"),
+        expr(hof).as("want"))
+      .as[(Int, Long, Long)].collect()
+    assert(w.length == 53)
+    assert(w.forall(r => r._2 == r._3), w.filter(r => r._2 != r._3).mkString(", "))
+    val energy = Multimodal.audioWindows(d).select("win_idx", "energy")
+      .as[(Long, Long)].collect().toMap
+    assert(energy.size == 2 && energy(0L) == w(0)._3 && energy(1L) == w(16)._3)
+  }
+
   test("frame sampling strides over 64-byte frames") {
     val d = docs(1L -> ("x" * 640))
     val idx = Multimodal.frameSample(d).select("frame_idx").as[Int].collect().sorted

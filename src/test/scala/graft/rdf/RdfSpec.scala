@@ -614,4 +614,88 @@ class RdfSpec extends AnyFunSuite {
     assert(back.count() == nasty.count())
     assert(Endpoint.describeAs(nasty, "s:2", "ntriples").contains("s:2"))
   }
+
+  test("triple store: every layout holds the same multiset of triples") {
+    val dir = SharedSpark.sfDir
+    val reference = RdfModel.tpchTriplesSet(spark, dir)
+    val cols = reference.columns.toSeq
+    def typed(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).sortBy(_._1).toSeq
+    val layouts = Seq(
+      "served" -> graft.Graft.triples(spark, dir),
+      "partitioned" -> TripleStore.partitionedTriples(spark, dir),
+      "bucketed" -> TripleStore.bucketedTriples(spark, dir))
+    val n = reference.count()
+    layouts.foreach { case (name, df) =>
+      // names and types match; the read-back may only widen nullability
+      assert(typed(df) == typed(reference), s"$name schema")
+      val aligned = df.select(cols.map(col): _*)
+      assert(aligned.count() == n, s"$name count")
+      assert(aligned.exceptAll(reference).isEmpty, s"$name holds extra rows")
+      assert(reference.exceptAll(aligned).isEmpty, s"$name misses rows")
+    }
+  }
+
+  test("triple store: served from a file scan, not the derivation's lineage") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val store = TripleStore.triples(spark, SharedSpark.sfDir)
+    // the frame every query builds on is a coalesce over the parquet
+    // read-back; the derivation would be ~55 nodes of unions and
+    // explodes re-analyzed by every query
+    val nodes = store.queryExecution.analyzed.collect { case n => n }.size
+    assert(nodes <= 3, s"served store plan has $nodes nodes")
+    val cached = store.queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r }
+    assert(cached.isDefined, "the store must be served from the cache")
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[String] =
+      r.getClass.getSimpleName +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val rdds = lineage(cached.get.cacheBuilder.cachedColumnBuffers)
+    assert(!rdds.contains("UnionRDD") && !rdds.contains("ShuffledRowRDD"),
+      s"cached buffers must not carry the build lineage: $rdds")
+  }
+
+  test("triple store: eviction drops the dimension slice and the files") {
+    // a separate session, so the shared store other suites hold stays
+    val s = spark.newSession()
+    val dir = SharedSpark.sfDir
+    val want = RdfModel.tpchTriplesSet(s, dir)
+      .filter(!col("s").startsWith("line:"))
+    val store = TripleStore.triples(s, dir)
+    val before = TripleStore.dimensionTriples(s, dir)
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val files = store.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case h: HadoopFsRelation => h.location.rootPaths }.flatten
+      .map(p => new java.io.File(p.toUri))
+    assert(files.nonEmpty && files.forall(_.exists))
+    TripleStore.evictTriples(s, dir)
+    assert(!files.exists(_.exists), "eviction must delete the store's files")
+    assert(!store.storageLevel.useMemory, "eviction must unpersist the store")
+    val after = TripleStore.dimensionTriples(s, dir)
+    assert(!(after eq before), "the slice must be re-derived over the new store")
+    assert(after.count() == want.count())
+    assert(after.exceptAll(want).isEmpty && want.exceptAll(after).isEmpty)
+    TripleStore.evictTriples(s, dir)
+  }
+
+  test("triple store: a dead process's store directory is swept") {
+    // no process can hold a pid this large (Linux caps pid_max at 2^22)
+    val dead = new java.io.File(sys.props("java.io.tmpdir"),
+      "graft_triples_2147483000_1_store_sf")
+    val live = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_triples_${ProcessHandle.current().pid()}_1_store_sf")
+    Seq(dead, live).foreach { d =>
+      d.mkdirs()
+      java.nio.file.Files.write(new java.io.File(d, "part-0.parquet").toPath,
+        Array[Byte](1))
+    }
+    try {
+      TripleStore.sweepStaleScratch()
+      assert(!dead.exists, "a dead pid's store must be reaped")
+      assert(live.exists, "this process's own store must stay")
+    } finally Seq(dead, live).foreach { d =>
+      Option(d.listFiles()).foreach(_.foreach(_.delete()))
+      d.delete()
+    }
+  }
 }
