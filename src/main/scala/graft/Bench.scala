@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A query that throws is reported in "errors"
@@ -9,39 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local test files are tiny; split scans finer so map-side
-      // stages use every core (cluster deployments keep the default)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the JVM (codegen pipeline, shuffle machinery) so the first
-    // timed query doesn't absorb one-time startup cost
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.range(1000).repartition(4).groupBy((org.apache.spark.sql.functions
-      .col("id") % 10).as("k")).count().collect()
-    // materialize the one-time scratch layouts OUTSIDE the timed loop:
-    // the BGP gate keys read the predicate-partitioned store / the
-    // subject-bucketed catalog table, whose first use pays a parquet
-    // write — that's store-BUILD cost (amortized across every query of
-    // a deployment), and folding it into whichever key runs first
-    // poisons round-over-round comparison (r8: sparql_bgp_star 4.1×
-    // slower purely from this accounting)
-    try {
-      graft.rdf.TripleStore.partitionedTriples(spark, sfDir)
-      graft.rdf.TripleStore.bucketedTriples(spark, sfDir)
-      // deriving the layouts cached the in-memory store as a side
-      // effect — evict it so rdf_build_triples still measures the
-      // cold store derivation, not a cache read
-      graft.rdf.TripleStore.evictTriples(spark, sfDir)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] layout warmup failed: ${e.getMessage}")
-    }
+    val spark = Harness.session(32)
+    Harness.warm(spark, sfDir)
     def esc(s: String): String =
       s.flatMap {
         case '"' => "\\\""
@@ -58,19 +26,11 @@ object Bench {
         timings(name) = -1.0
         errors(name) = "not in SparkEntry.queries"
       } else {
-        val t0 = System.nanoTime()
-        try {
-          // noop sink materializes every output column — count() would
-          // let Catalyst prune away the very expressions under test
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          timings(name) = (System.nanoTime() - t0) / 1e9
-        } catch {
+        try timings(name) = Harness.timeKey(spark, sfDir, name, blocking = false)
+        catch {
           case e: Throwable =>
             timings(name) = -1.0
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        } finally {
-          graft.Checkpoints.releaseCaches()
         }
       }
     }

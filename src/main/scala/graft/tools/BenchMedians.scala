@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round bench denoiser (VERDICT r9 task #5): re-measure the N
   * heaviest keys of the latest full Bench sweep with warm 3-rep
   * medians, in ONE command, and write the table beside the sweep
   * artifact. The box swings same-code timings up to 3× run-to-run, so
   * every round so far has re-litigated phantom regressions by hand
   * (r7 LPA, r8 text_quality_score, r9 bm25) — this main is that
-  * ad-hoc BenchOne ritual made systematic and checked in.
+  * ad-hoc re-measurement ritual made systematic and checked in.
   *
   * Usage: runMain graft.tools.BenchMedians [benchJson] [topN] [reps]
   *   benchJson defaults to bench_latest.json (written by graft.Bench);
@@ -39,7 +37,6 @@ object BenchMedians {
     val topN = if (args.length > 1) Some(args(1).toInt) else None
     val reps = if (args.length > 2) args(2).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     val sweep = parseQueries(
       java.nio.file.Files.readString(java.nio.file.Paths.get(benchJson)))
@@ -59,47 +56,12 @@ object BenchMedians {
         }
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    // same scratch-layout warmup as Bench: the BGP keys' first use
-    // otherwise pays the store-build parquet write inside a timing
-    try {
-      graft.rdf.TripleStore.partitionedTriples(spark, sfDir)
-      graft.rdf.TripleStore.bucketedTriples(spark, sfDir)
-      graft.rdf.TripleStore.evictTriples(spark, sfDir)
-    } catch { case e: Throwable =>
-      System.err.println(s"[medians] layout warmup failed: ${e.getMessage}")
-    }
+    val spark = graft.Harness.session(32)
+    graft.Harness.warm(spark, sfDir)
 
     val rows = keys.map { case (name, sweepSec) =>
-      val runs = (1 to reps).map { _ =>
-        // rdf_build_triples MEASURES the cold store derivation (the
-        // sweep evicts after layout warmup so its first caller pays
-        // it); a warm rep here would read the cache and report 0.08 s
-        // against the sweep's 9.8 s — evict before each rep of that
-        // key so the median measures the same regime. Every other rdf
-        // key runs store-warm in the sweep and stays warm here.
-        if (name == "rdf_build_triples")
-          try graft.rdf.TripleStore.evictTriples(spark, sfDir)
-          catch { case _: Throwable => () }
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // cleanup runs BETWEEN reps, outside the timed region — and
-        // BLOCKING, so rep N's async removal backlog can't pressure
-        // rep N+1's checkpoints into disk spills (the r16 LPA-spread
-        // adjudication: non-blocking drains tripled later reps)
-        graft.Checkpoints.releaseCaches(blocking = true)
-        dt
-      }.sorted
+      val runs = (1 to reps).map(_ =>
+        graft.Harness.timeKey(spark, sfDir, name, blocking = true)).sorted
       val median = runs(runs.length / 2)
       println(f"[medians] $name sweep=$sweepSec%.2f median=$median%.2f " +
         s"runs=${runs.map(t => f"$t%.2f").mkString(",")}")

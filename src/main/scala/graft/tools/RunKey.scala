@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev loop helper: run one SparkEntry key against a data dir and
   * print its rows (sorted, truncate=false) — the fast local
   * counterpart of the driver's full Verify+DuckDB pass.
@@ -13,14 +11,8 @@ object RunKey {
     val key = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val n = if (args.length > 2) args(2).toInt else 50
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName(s"runkey-$key")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Verify's session, so the rows are the ones Verify writes
+    val spark = graft.Harness.session(4)
     val df = graft.SparkEntry.queries(key)(spark, dir)
     val cols = df.columns.sorted
     df.orderBy(cols.map(org.apache.spark.sql.functions.col): _*)

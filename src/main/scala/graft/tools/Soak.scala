@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-command scale soak: generate the synthetic tables at the
   * requested multiple of sf0.1 (skipped if already present) and run
   * the soak key set isolated-and-warm in this JVM, printing one
@@ -51,15 +49,7 @@ object Soak {
       else if (args.length > 2 && args(2).nonEmpty) args(2).split(',').toSeq
       else defaultKeys
     val reps = if (args.length > 3) args(3).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(32)
 
     if (!new java.io.File(s"$dataDir/lineitem.parquet").exists()) {
       System.err.println(s"[soak] generating sf${times10 / 10.0} data at $dataDir")
@@ -68,38 +58,18 @@ object Soak {
       System.err.println(f"[soak] generated in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     } else System.err.println(s"[soak] reusing data at $dataDir")
 
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    // the cold store build + cache/layout materialization used to
-    // land on whatever key ran FIRST (SOAK_r14's "1261 s" first key
-    // was ~18 s warm; this round's first sf1 probe put the 200 s
-    // partitioned-parquet write on sparql_bgp_chain) — warm the store
-    // AND both scratch layouts explicitly, reporting the cost as its
-    // own line, so every per-key number below is per-operator truth
-    val w0 = System.nanoTime()
-    graft.rdf.TripleStore.triples(spark, dataDir).count()
-    try {
-      graft.rdf.TripleStore.partitionedTriples(spark, dataDir)
-      graft.rdf.TripleStore.bucketedTriples(spark, dataDir)
-    } catch { case e: Throwable =>
-      System.err.println(s"[soak] layout warmup failed: ${e.getMessage}")
-    }
-    val warmupSec = (System.nanoTime() - w0) / 1e9
-    println(f"[soak] warmup (store build + cache + layouts) $warmupSec%.1f s")
+    // its own line, so every per-key number below is per-operator truth
+    val warmupSec = graft.Harness.warm(spark, dataDir)
+    println(f"[soak] warmup (JVM + store build + cache + layouts) $warmupSec%.1f s")
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     keys.foreach { name =>
       val runs = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          graft.SparkEntry.queries(name)(spark, dataDir)
-            .write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
+        try Some(graft.Harness.timeKey(spark, dataDir, name, blocking = true))
+        catch {
           case e: Throwable =>
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
             None
-        } finally {
-          graft.Checkpoints.releaseCaches(blocking = true)
         }
       }.sorted
       if (runs.nonEmpty) {

@@ -9,26 +9,42 @@ import org.scalatest.funsuite.AnyFunSuite
   * storage, so no other library source may call `.localCheckpoint(`,
   * `.persist(` or `.cache()` — those blocks would sit outside the one
   * release. TripleStore is the exception: it owns the session store
-  * cache and the `TripleStats.persist` profile write.
+  * cache and the `TripleStats.persist` profile write. Likewise
+  * [[Harness]] is the one place a session is built.
   */
 class StorageOwnerLintSpec extends AnyFunSuite {
 
-  private val root = Paths.get("src/main/scala")
-  private val owners = Set("graft/Checkpoints.scala", "graft/rdf/TripleStore.scala")
-  private val calls = Seq(".localCheckpoint(", ".persist(", ".cache()")
-
-  test("only Checkpoints and TripleStore persist or checkpoint") {
-    val sources = Files.walk(root).iterator().asScala
+  /** `file:line: text` for every line under `root` holding one of
+    * `calls`, outside the files (relative to `root`) in `owners`.
+    */
+  private def hits(root: String, owners: Set[String],
+                   calls: Seq[String]): Seq[String] = {
+    val dir = Paths.get(root)
+    val sources = Files.walk(dir).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(sources.size > 50, s"no library sources found under $root")
-    val hits = for {
+    for {
       f <- sources
-      rel = root.relativize(f).toString
+      rel = dir.relativize(f).toString
       if !owners(rel)
       (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
       if calls.exists(line.contains)
-    } yield s"$rel:${n + 1}: ${line.trim}"
-    if (hits.nonEmpty)
-      fail("storage calls outside graft.Checkpoints:\n" + hits.mkString("\n"))
+    } yield s"$root/$rel:${n + 1}: ${line.trim}"
+  }
+
+  test("only Checkpoints and TripleStore persist or checkpoint") {
+    val found = hits("src/main/scala",
+      Set("graft/Checkpoints.scala", "graft/rdf/TripleStore.scala"),
+      Seq(".localCheckpoint(", ".persist(", ".cache()"))
+    if (found.nonEmpty)
+      fail("storage calls outside graft.Checkpoints:\n" + found.mkString("\n"))
+  }
+
+  test("only Harness builds a SparkSession") {
+    // split so this file does not match itself
+    val builder = "SparkSession" + ".builder"
+    val found = hits("src", Set("main/scala/graft/Harness.scala"), Seq(builder))
+    if (found.nonEmpty)
+      fail("sessions built outside graft.Harness:\n" + found.mkString("\n"))
   }
 }
