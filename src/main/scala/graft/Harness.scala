@@ -36,12 +36,9 @@ object Harness {
     spark
   }
 
-  /** Warm the JVM (codegen, shuffle machinery) and materialize the
-    * triple store and both scratch layouts, so no timed key absorbs
-    * one-time startup or store-build cost. The layouts' first use pays
-    * a parquet write, a cost amortized over a deployment's queries
-    * (r8: folding it into the first key made `sparql_bgp_star` 4.1×
-    * slower by accounting alone). Returns the seconds it took.
+  /** Warm the JVM (codegen, shuffle machinery) and build the triple
+    * store, so no timed key absorbs one-time startup or store-build
+    * cost. Returns the seconds it took.
     */
   def warm(spark: SparkSession, sfDir: String): Double = {
     val t0 = System.nanoTime()
@@ -50,8 +47,6 @@ object Harness {
       .count().collect()
     try {
       TripleStore.triples(spark, sfDir).count()
-      TripleStore.partitionedTriples(spark, sfDir)
-      TripleStore.bucketedTriples(spark, sfDir)
     } catch { case e: Throwable =>
       System.err.println(s"[harness] store warmup failed: ${e.getMessage}")
     }

@@ -35,8 +35,8 @@ object SparkEntry {
     // changelog compaction, and the portable HLL sketch
     "ann_knn_join_banded", "text_bm25_topk", "text_bpe_pairs",
     "events_latest_state", "sketch_hll_distinct", "text_contamination_bloom",
-    // r9: the forced over-budget dedup regime, the zero-exchange
-    // bucketed star join, the as-of join, and the CMS sketch
+    // r9: the forced over-budget dedup regime, the star BGP under its
+    // second key, the as-of join, and the CMS sketch
     "dedup_ngram_jaccard_gated", "sparql_bgp_star_bucketed",
     "events_asof_join", "sketch_cms_counts",
     // r9 batch 2: substring-level dedup, the quantile sketch, and the

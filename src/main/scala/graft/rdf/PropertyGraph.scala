@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Where the reference mutates a node store statement-at-a-time, this
   * is two declarative aggregations over the triple table — both plain
-  * shuffles on `s` that scale linearly and co-locate with any
-  * subject-bucketed layout.
+  * shuffles on `s` that scale linearly.
   */
 object PropertyGraph {
 

@@ -19,11 +19,10 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StringType, StructFi
   * everything stays one declarative relation and the property-graph
   * view is derived — see [[PropertyGraph]]).
   *
-  * Scale posture: at cluster scale this table is written
-  * `partitionBy("p")` (vertical partitioning à la S2RDF) so a BGP
-  * pattern with a constant predicate becomes partition pruning; the
-  * lexical/numeric split keeps filters codegen-friendly (no casts in
-  * the hot path).
+  * Scale posture: [[TripleStore]] writes this table once, clustered
+  * by predicate, so a BGP pattern with a constant predicate skips
+  * most of the store; the lexical/numeric split keeps filters
+  * codegen-friendly (no casts in the hot path).
   */
 object RdfModel {
 

@@ -351,11 +351,10 @@ object RdfQueries {
     // store snapshots — the change-review pass a versioned RDF
     // dataset runs before publishing. Pure set algebra: two LEFT ANTI
     // joins keyed on the whole triple (never a collect, never a full
-    // sort); at 100 TB both sides shuffle once on the same key, and a
-    // predicate-partitioned layout prunes the comparison to changed
-    // predicates. The second snapshot here is a deterministic
-    // derivation (drop nation comments, add the VIP delta) so the
-    // oracle can state the closed-form answer (r9 b23)
+    // sort); at 100 TB both sides shuffle once on the same key. The
+    // second snapshot here is a deterministic derivation (drop nation
+    // comments, add the VIP delta) so the oracle can state the
+    // closed-form answer (r9 b23)
     "rdf_diff" -> { (s, dir) =>
       val v1 = TripleStore.dimensionTriples(s, dir)
         .select(col("s"), col("p"), col("o"))
@@ -409,9 +408,8 @@ object RdfQueries {
     // void:propertyPartition, void:classPartition) over the dimension
     // store. Three aggregations over the ONE cached triple relation;
     // each count_distinct shuffles a single column (never a row-wide
-    // distinct), and the property/class partitions combine map-side —
-    // at 100 TB this is the predicate-partitioned layout's metadata
-    // pass, one scan per statistic family.
+    // distinct), and the property/class partitions combine map-side:
+    // one scan per statistic family.
     "rdf_void_stats" -> { (s, dir) =>
       val t = TripleStore.dimensionTriples(s, dir)
       val props = t.groupBy(col("p"))

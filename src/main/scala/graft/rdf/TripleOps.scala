@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
   * Set semantics ride SQL EXCEPT (null-safe, distinct), so re-adding
   * an overlapping graph is idempotent and removal never leaves
   * duplicates behind. At 100 TB `add` is the merge-on-write compaction
-  * path: one shuffle keyed by the full term, or a bucket-local merge
-  * when both sides share the store's subject bucketing
-  * ([[TripleStore.writeBucketed]]).
+  * path: one shuffle keyed by the full term.
   */
 object TripleOps {
 

@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   * metadata-scale even at 100 TB).
   *
   * Design: [[TripleStore]] registers every relation it serves (the
-  * cached base view and its dimension/partitioned/bucketed layouts);
-  * the profile is computed LAZILY on the first multi-pattern BGP
-  * compile against that relation and memoized, so the store build
-  * itself never pays the pass and every later compile reads a map.
+  * cached store and its dimension slice); the profile is computed
+  * LAZILY on the first multi-pattern BGP compile against that
+  * relation and memoized, so the store build itself never pays the
+  * pass and every later compile reads a map.
   * Unregistered frames (update slices, ad-hoc test frames) simply
   * return None and the compiler keeps its static bound-term
   * heuristic — stats are an accelerator, never a correctness
@@ -58,7 +58,7 @@ object TripleStats {
   }
 
   /** The profile as a relation — the ANALYZE pass itself. */
-  def profile(df: DataFrame): DataFrame =
+  private def profile(df: DataFrame): DataFrame =
     df.groupBy(col("p"))
       .agg(count(lit(1)).as("n"),
         approx_count_distinct(col("s")).as("ns"),
@@ -70,39 +70,15 @@ object TripleStats {
     df
   }
 
-  /** Register with a PRECOMPUTED profile (loaded from the sidecar a
-    * layout write persisted): no scan ever runs against this frame —
-    * the 100 TB posture, where a new session's first compile must not
-    * pay an ANALYZE pass the writer already paid.
+  /** Register with a PRECOMPUTED profile: no scan ever runs against
+    * this frame. Tests plant stats through it to pin the compiler's
+    * stats-driven choices.
     */
   def registerPrecomputed(df: DataFrame,
                           stats: Map[String, PredStat]): DataFrame = {
     registry.put(df, new Memo(df, Some(stats)))
     df
   }
-
-  /** The sidecar directory name — underscore-prefixed, so Spark's
-    * file index treats it as hidden and partition discovery over the
-    * layout never sees it.
-    */
-  val SIDECAR = "_predicate_stats"
-
-  /** Persist the profile beside a written layout. */
-  def persist(triples: DataFrame, layoutPath: String): Unit =
-    profile(triples).coalesce(1)
-      .write.mode("overwrite").parquet(s"$layoutPath/$SIDECAR")
-
-  /** Load a persisted profile, or None when the sidecar is absent or
-    * unreadable (stats are an accelerator, never a dependency).
-    */
-  def load(spark: org.apache.spark.sql.SparkSession,
-           layoutPath: String): Option[Map[String, PredStat]] =
-    try {
-      Some(spark.read.parquet(s"$layoutPath/$SIDECAR").collect()
-        .map(r => r.getString(0) ->
-          PredStat(r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toMap)
-    } catch { case _: Exception => None }
 
   /** The memoized profile of a registered frame (computing it on
     * first use), or None for unregistered frames.

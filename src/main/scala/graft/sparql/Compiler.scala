@@ -2208,8 +2208,7 @@ object Compiler {
         TriplePattern(s, Var("__negp"), o)).drop("__negp")
     case PathAlt(s, preds, o) =>
       // the positive twin of NegPath: one hop over any predicate IN
-      // the set — an isin filter the partitioned store turns into
-      // multi-directory partition pruning
+      // the set — one isin filter on the store's predicate column
       patternDf(triples.filter(col("p").isin(preds: _*)),
         TriplePattern(s, Var("__altp"), o)).drop("__altp")
     case SubSelect(q) =>

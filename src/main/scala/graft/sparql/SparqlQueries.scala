@@ -27,18 +27,6 @@ object SparqlQueries {
     numericVars.foldLeft(out)((df, c) => df.withColumn(c, col(c).cast("double")))
   }
 
-  /** [[run]] against the PREDICATE-PARTITIONED parquet layout instead
-    * of the in-memory cached relation — the BGP and property-path
-    * gate keys go through this so partition pruning (the 100 TB scan
-    * shape) is exercised under the oracle end-to-end, not just
-    * asserted in PlanSpec.
-    */
-  private def runP(spark: SparkSession, dir: String, q: SelectQuery,
-                   numericVars: Seq[String] = Seq.empty): DataFrame = {
-    val out = Compiler.run(TripleStore.partitionedTriples(spark, dir), q)
-    numericVars.foldLeft(out)((df, c) => df.withColumn(c, col(c).cast("double")))
-  }
-
   /** A small named-graph dataset over the dimension slice: per-entity
     * :name triples split into three graphs (the quad-store shape the
     * TriG/N-Quads importers produce).
@@ -56,10 +44,8 @@ object SparqlQueries {
         col("o_num"), col("o_is_iri"), col("lang"))
   }
 
-  /** One star-BGP text shared by the partitioned and bucketed gate
-    * keys — the pair exists to prove identical answers over two
-    * storage layouts, so a single definition keeps them locked
-    * together (same for the oracle SQL below).
+  /** The star BGP behind `sparql_bgp_star`; `sparql_bgp_star_bucketed`
+    * is a second driver key for the same query over the same store.
     */
   private val STAR_BGP =
     """SELECT ?c ?n ?m ?b WHERE {
@@ -69,20 +55,14 @@ object SparqlQueries {
       |  ?c :acctbal ?b .
       |}""".stripMargin
 
+  private val starBgp: (SparkSession, String) => DataFrame = (s, dir) =>
+    run(s, dir, SparqlParser.parse(STAR_BGP), numericVars = Seq("b"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sparql_bgp_star" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(STAR_BGP), numericVars = Seq("b"))
-    },
-    // the same star BGP against the SUBJECT-BUCKETED catalog table —
-    // the star-join half of the cluster layout under the oracle
-    // (PlanSpec proves the exchange-free join; this proves answers)
-    "sparql_bgp_star_bucketed" -> { (s, dir) =>
-      Compiler.run(TripleStore.bucketedTriples(s, dir),
-          SparqlParser.parse(STAR_BGP))
-        .withColumn("b", col("b").cast("double"))
-    },
+    "sparql_bgp_star" -> starBgp,
+    "sparql_bgp_star_bucketed" -> starBgp,
     "sparql_bgp_chain" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         """SELECT ?l ?rn ?q WHERE {
           |  ?l :ofOrder ?o . ?o :byCustomer ?c .
           |  ?c :hasNation ?n . ?n :inRegion ?r . ?r :name ?rn .
@@ -221,7 +201,7 @@ object SparqlQueries {
           round(col("sm"), 2).as("sm"), col("cnt"))
     },
     "sparql_path_plus" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         "SELECT ?x ?y WHERE { ?x (:hasNation|:inRegion)+ ?y }"))
     },
     // SPARQL 1.1 §9.1 path NESTING: a closure over a parenthesized
@@ -231,7 +211,7 @@ object SparqlQueries {
     // same-region is already an equivalence). Beyond-reference: the
     // reference's Jena-fed compiler rejects this form too (r10)
     "sparql_path_seq_plus" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         "SELECT ?x ?y WHERE { ?x (:inRegion/^:inRegion)+ ?y }"))
     },
     // range over a parenthesized sequence — the last nesting
@@ -240,7 +220,7 @@ object SparqlQueries {
     // empty, so the result IS the k=1 relation — exercising the
     // empty-higher-hop union leg (r10)
     "sparql_path_seq_range" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         "SELECT ?x ?y WHERE { ?x (:hasNation/:inRegion){1,2} ?y }"))
     },
     // `{n,}` — unbounded-above range (ARQ extension the reference's
@@ -250,7 +230,7 @@ object SparqlQueries {
     // edges exist), so the oracle is the plain two-hop join while the
     // ENGINE still runs the full prefix∘closure machinery
     "sparql_path_range_min" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         "SELECT ?x ?y WHERE { ?x (:hasNation|:inRegion){2,} ?y }"))
     },
     "sparql_parser_e2e" -> { (s, dir) =>
@@ -403,7 +383,7 @@ object SparqlQueries {
           |  ?c a :Customer .
           |  ?c :hasNation/:inRegion/:name ?n .
           |}""".stripMargin
-      runP(s, dir, SparqlParser.parse(text))
+      run(s, dir, SparqlParser.parse(text))
     },
     // alternation NESTED inside a sequence (r14, §9.1's last nesting
     // shape): the second step is a (forward|inverse) choice — region
@@ -411,7 +391,7 @@ object SparqlQueries {
     // over ^:hasNation (including the supplier itself). Bag semantics:
     // the combo expansion unions one plain sequence per choice
     "sparql_path_alt_in_seq" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         """SELECT ?x ?y WHERE {
           |  ?x a :Supplier .
           |  ?x :hasNation/(:inRegion|^:hasNation) ?y .
@@ -428,7 +408,7 @@ object SparqlQueries {
           |  ?r ^:inRegion/^:hasNation ?s .
           |  ?s a :Supplier .
           |}""".stripMargin
-      runP(s, dir, SparqlParser.parse(text))
+      run(s, dir, SparqlParser.parse(text))
     },
     // MINUS: anti-join on the shared variable (vs NOT EXISTS, which
     // correlates; MINUS with disjoint domains removes nothing)
@@ -464,19 +444,19 @@ object SparqlQueries {
     // zero-or-more path from a bound subject: the endpoint itself plus
     // everything reachable over the predicate alternation
     "sparql_path_star" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         "SELECT ?y WHERE { <cust:7> (:hasNation|:inRegion)* ?y }"))
     },
     // zero-or-one path: each customer relates to itself (zero hops)
     // and to its nation (one hop)
     "sparql_path_zeroone" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         "SELECT ?c ?y WHERE { ?c a :Customer . ?c :hasNation? ?y }"))
     },
     // bare PathAlternative (no modifier): one hop over either geo
-    // predicate — the isin filter prunes BOTH predicate partitions
+    // predicate — one isin filter keeps BOTH predicates' triples
     "sparql_path_alt" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         "SELECT ?a ?b WHERE { ?a (:hasNation|:inRegion) ?b }"))
     },
     // expression FILTERs: computed left sides (string length,
@@ -666,7 +646,7 @@ object SparqlQueries {
     // negated property set: every supplier edge that is neither
     // acctbal nor rdf:type (name literal + nation IRI remain)
     "sparql_neg_path" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         """SELECT ?s ?o WHERE {
           |  ?s a :Supplier .
           |  ?s !(:acctbal|a) ?o .
@@ -989,7 +969,7 @@ object SparqlQueries {
     },
     // fixed-range repetition path {n,m}: bounded hops, no closure
     "sparql_path_range" -> { (s, dir) =>
-      runP(s, dir, SparqlParser.parse(
+      run(s, dir, SparqlParser.parse(
         "SELECT ?y WHERE { <cust:7> (:hasNation|:inRegion){1,2} ?y }"))
     },
     // named-graph management (SPARQL Update §3.2): COPY the nation

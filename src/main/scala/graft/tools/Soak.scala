@@ -60,7 +60,7 @@ object Soak {
 
     // its own line, so every per-key number below is per-operator truth
     val warmupSec = graft.Harness.warm(spark, dataDir)
-    println(f"[soak] warmup (JVM + store build + cache + layouts) $warmupSec%.1f s")
+    println(f"[soak] warmup (JVM + store build + cache) $warmupSec%.1f s")
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     keys.foreach { name =>

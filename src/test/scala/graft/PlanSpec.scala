@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.IsNotNull
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +18,28 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+
+  /** Every scan of the cached triple store in `df`'s plan filters on a
+    * constant predicate, e.g. `[isnotnull(p#..), (p#.. = :hasNation)]`:
+    * the store is clustered by `p`, so the cached batches' min/max
+    * stats skip every batch outside it (RdfSpec pins the skip). A
+    * store scan with no `p` predicate reads every triple.
+    */
+  private def assertStoreScansPruned(df: DataFrame): Unit = {
+    val store = graft.rdf.TripleStore.triples(spark, dir)
+      .queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r.cacheBuilder }.get
+    val scans = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(
+      df.queryExecution.executedPlan) {
+      case s: InMemoryTableScanExec if s.relation.cacheBuilder eq store => s
+    }
+    assert(scans.nonEmpty, "the query must scan the cached store")
+    scans.foreach { s =>
+      assert(s.predicates.exists(e => !e.isInstanceOf[IsNotNull] &&
+        e.references.map(_.name).toSet == Set("p")),
+        s"store scan without a constant-predicate filter: ${s.simpleString(400)}")
+    }
+  }
 
   test("q3_join_topk: pushdown + broadcast dims + TakeOrderedAndProject") {
     val p = plan("q3_join_topk")
@@ -30,27 +56,17 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("sparql_bgp_chain: patterns prune the predicate-partitioned store") {
-    val p = plan("sparql_bgp_chain")
-    assert(p.contains("PartitionFilters: [isnotnull(p"),
-      "constant-predicate patterns must prune parquet partitions")
-    assert(!p.contains("PartitionFilters: []"),
-      "no pattern may scan every predicate directory")
+    assertStoreScansPruned(SparkEntry.queries("sparql_bgp_chain")(spark, dir))
   }
 
   test("sparql_bgp_star: star patterns prune the partitioned store") {
-    val p = plan("sparql_bgp_star")
-    assert(p.contains("PartitionFilters: [isnotnull(p"),
-      "constant-predicate patterns must prune parquet partitions")
+    assertStoreScansPruned(SparkEntry.queries("sparql_bgp_star")(spark, dir))
   }
 
   test("sparql_bgp_star_bucketed: patterns scan the bucketed table") {
-    val p = plan("sparql_bgp_star_bucketed")
-    // at gate SF the dims broadcast, so the planner may not CONSUME
-    // the bucketing (the dedicated bucketed-join test forces and
-    // proves the exchange-free path); here we pin that the gate key
-    // actually reads the bucketed catalog table
-    assert(p.contains("spark_catalog.default.graft_triples_"),
-      "the gate key must read the subject-bucketed catalog table")
+    // the same star BGP as sparql_bgp_star, over the same store
+    assert(!plan("sparql_bgp_star_bucketed").contains("CartesianProduct"),
+      "the star patterns must join on the subject")
   }
 
   test("dedup_ngram_jaccard_gated: band candidates, no quadratic prefix join") {
@@ -728,11 +744,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("sparql_path_inverse: both inverse hops prune the partitioned store") {
-    val p = plan("sparql_path_inverse")
-    assert(p.contains("PartitionFilters: [isnotnull(p"),
-      "inverse steps must still prune predicate directories")
-    assert(!p.contains("PartitionFilters: []"),
-      "no pattern may scan every predicate directory")
+    assertStoreScansPruned(SparkEntry.queries("sparql_path_inverse")(spark, dir))
   }
 
   test("graph_resource_alloc: weighted wedges partial-agg; top-k heaps") {
@@ -901,12 +913,9 @@ class PlanSpec extends AnyFunSuite {
   test("sparql_path_seq_range: no closure — bounded joins keep scans visible") {
     // unlike the '+' form there is no checkpoint barrier, so the FULL
     // plan must show pruned predicate scans and equi-join composition
-    val p = plan("sparql_path_seq_range")
-    assert(p.contains("PartitionFilters: [isnotnull(p"),
-      "each sequence step must prune to its predicate directory")
-    assert(!p.contains("PartitionFilters: []"),
-      "no step may scan every predicate directory")
-    assert(!p.contains("CartesianProduct"))
+    val df = SparkEntry.queries("sparql_path_seq_range")(spark, dir)
+    assertStoreScansPruned(df)
+    assert(!df.queryExecution.executedPlan.toString.contains("CartesianProduct"))
   }
 
   test("rdf_canon_digest: label joins keyed; one-row commutative fold") {
@@ -920,16 +929,12 @@ class PlanSpec extends AnyFunSuite {
     // the key's final frame sits on the closure's localCheckpoint, so
     // pin the COMPOSED edge relation the closure iterates over — that
     // is where leg pruning lives
-    val t = graft.rdf.TripleStore.partitionedTriples(spark, dir)
-    val p = graft.sparql.Compiler.seqEdges(t, Seq(
+    val t = graft.rdf.TripleStore.triples(spark, dir)
+    val edges = graft.sparql.Compiler.seqEdges(t, Seq(
       graft.sparql.Ast.PathStep(":inRegion", inverse = false),
       graft.sparql.Ast.PathStep(":inRegion", inverse = true)))
-      .queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters: [isnotnull(p"),
-      "each sequence step must prune to its predicate directory")
-    assert(!p.contains("PartitionFilters: []"),
-      "no step may scan every predicate directory")
-    assert(!p.contains("CartesianProduct"),
+    assertStoreScansPruned(edges)
+    assert(!edges.queryExecution.executedPlan.toString.contains("CartesianProduct"),
       "the step composition must be an equi-join on the hop var")
   }
 
@@ -1269,50 +1274,6 @@ class PlanSpec extends AnyFunSuite {
     assert(Graft.query(t, "SELECT ?c WHERE { ?c a :Customer }").count() > 0)
   }
 
-  test("subject-bucketed store joins star patterns without an exchange") {
-    graft.rdf.TripleStore.writeBucketed(Graft.triples(spark, dir),
-      "graft_bucketed_test", buckets = 4)
-    val bucketed = spark.table("graft_bucketed_test")
-    // force the shuffle-join path: broadcast would mask the bucketing
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val df = Graft.sparql(bucketed,
-        """SELECT ?c ?n ?m WHERE {
-          |  ?c :name ?n . ?c :mktsegment ?m . ?c :acctbal ?b .
-          |  FILTER(?b >= 0)
-          |}""".stripMargin)
-      val p = df.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange"),
-        s"subject-bucketed self-joins must consume the bucketing, got:\n${p.take(2000)}")
-      assert(df.count() > 0)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS graft_bucketed_test")
-    }
-  }
-
-  test("predicate-partitioned store prunes constant-predicate patterns") {
-    val path = java.nio.file.Files.createTempDirectory("graft_pstore").toString
-    graft.rdf.TripleStore.writePartitioned(Graft.triples(spark, dir), path)
-    val pt = graft.rdf.TripleStore.readPartitioned(spark, path)
-    val df = Graft.sparql(pt, "SELECT ?c ?n WHERE { ?c :hasNation ?n }")
-    val scan = df.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(scan.contains("hasNation"),
-      s"constant predicate must prune partitions, got: $scan")
-    // pruned scan still answers correctly (customers + suppliers)
-    assert(df.count() ==
-      Graft.sparql(spark, dir, "SELECT ?c ?n WHERE { ?c :hasNation ?n }").count())
-    // the alternation path's isin filter prunes BOTH listed predicate
-    // partitions (and only them)
-    val alt = Graft.sparql(pt,
-      "SELECT ?a ?b WHERE { ?a (:hasNation|:inRegion) ?b }")
-    val altScan = alt.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(altScan.contains("hasNation") && altScan.contains("inRegion"),
-      s"alternation must prune to its predicate set, got: $altScan")
-  }
-
   test("q22: rational threshold broadcasts; NOT EXISTS is an anti join") {
     val p = plan("q22_idle_customers")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
@@ -1365,12 +1326,12 @@ class PlanSpec extends AnyFunSuite {
 
   test("sparql_path_alt_in_seq: every branch prunes; no product") {
     // the combo expansion unions plain sequences — each branch's
-    // constant-predicate steps must still prune the predicate-
-    // partitioned store, and the union must stay equi-join-only
-    val p = plan("sparql_path_alt_in_seq")
+    // constant-predicate steps must still filter the store on `p`,
+    // and the union must stay equi-join-only
+    val df = SparkEntry.queries("sparql_path_alt_in_seq")(spark, dir)
+    val p = df.queryExecution.executedPlan.toString
     assert(p.contains("Union"), "alternation must expand to a union")
-    assert(p.contains("PartitionFilters: [isnotnull(p"),
-      "branch patterns must prune predicate partitions")
+    assertStoreScansPruned(df)
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       "branches must compile to equi-joins")
@@ -1535,32 +1496,6 @@ class PlanSpec extends AnyFunSuite {
     val aggs = "HashAggregate".r.findAllIn(pp).size
     assert(aggs <= base,
       s"the two embedded aggregates must share one fold ($aggs vs $base HashAggregates)")
-  }
-
-  test("TripleStats sidecar: write-time profile persists, loads, and hides from reads") {
-    // the ANALYZE-at-write posture: a new session loads the
-    // join-ordering stats in O(vocabulary) instead of re-scanning —
-    // and the hidden `_predicate_stats` dir never leaks into the
-    // layout's own partition discovery
-    val t = Graft.triples(spark, dir)
-    val path = java.nio.file.Files.createTempDirectory("graft_stats_t").toString
-    try {
-      graft.rdf.TripleStore.writePartitioned(t, path)
-      val loaded = graft.rdf.TripleStats.load(spark, path)
-      assert(loaded.isDefined && loaded.get.nonEmpty, "sidecar must load")
-      val direct = graft.rdf.TripleStats.profile(t).collect()
-        .map(r => r.getString(0) -> graft.rdf.TripleStats.PredStat(
-          r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-      assert(loaded.get == direct, "persisted profile must equal the direct one")
-      val back = graft.rdf.TripleStore.readPartitioned(spark, path)
-      assert(back.count() == t.count(),
-        "the sidecar must be invisible to the layout read")
-      val served = graft.rdf.TripleStats.registerPrecomputed(back, loaded.get)
-      assert(graft.rdf.TripleStats.forFrame(served).contains(direct),
-        "precomputed registration must serve without a scan")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    }
   }
 
   test("sparql_graph_var_path: ONE pass over the quads, invariant in graph count") {

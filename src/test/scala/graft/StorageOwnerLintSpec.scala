@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * storage, so no other library source may call `.localCheckpoint(`,
   * `.persist(` or `.cache()` — those blocks would sit outside the one
   * release. TripleStore is the exception: it owns the session store
-  * cache and the `TripleStats.persist` profile write. Likewise
+  * cache. Likewise
   * [[Harness]] is the one place a session is built.
   */
 class StorageOwnerLintSpec extends AnyFunSuite {
