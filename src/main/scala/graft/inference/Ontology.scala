@@ -8,6 +8,9 @@ import org.apache.spark.sql.functions._
   * (rdfs:subPropertyOf, "SPO") — the inputs the reference's
   * micro-reasoners walk transitively (reference:
   * pidb-rdf-import/src/main/java/semantics/inference/MicroReasoners.java:20-22).
+  * Both hierarchies are closed once, on the driver, when the object
+  * loads ([[close]]); the reasoners filter on the closed sets with
+  * `isin`, so no Spark job ever closes them.
   */
 object Ontology {
 
@@ -66,11 +69,33 @@ object Ontology {
     ":inRegion" -> ":Region",
     ":byCustomer" -> ":Customer")
 
-  def subClassDf(spark: SparkSession): DataFrame =
-    spark.createDataFrame(subClassOf).toDF("sub", "sup")
+  /** Strict transitive closure of (sub, sup) pairs, closed on the
+    * driver: each round adds every two-hop composition, and the loop
+    * stops when a round adds nothing, which a cycle cannot prevent
+    * because the pair set only grows within nodes × nodes. The static
+    * hierarchies are a dozen pairs known at compile time, so a Spark
+    * closure over them would spend about twenty jobs on what the
+    * driver computes in microseconds.
+    */
+  def close(pairs: Seq[(String, String)]): Set[(String, String)] = {
+    var cur = pairs.toSet
+    var grown = true
+    while (grown) {
+      val next = cur ++ (for ((a, b) <- cur; (c, d) <- cur if b == c) yield (a, d))
+      grown = next.size > cur.size
+      cur = next
+    }
+    cur
+  }
 
-  def subPropertyDf(spark: SparkSession): DataFrame =
-    spark.createDataFrame(subPropertyOf).toDF("sub", "sup")
+  /** `top` and every node below it in a [[close]]d hierarchy, sorted
+    * so the `isin` lists the reasoners build are stable.
+    */
+  def below(closure: Set[(String, String)], top: String): Seq[String] =
+    (closure.collect { case (sub, `top`) => sub } + top).toSeq.sorted
+
+  val subClassClosure: Set[(String, String)] = close(subClassOf)
+  val subPropertyClosure: Set[(String, String)] = close(subPropertyOf)
 
   /** The ontology as triples (LiteOntologyImporter's input shape;
     * reference: pidb-rdf-import/src/main/java/semantics/LiteOntologyImporter.java).

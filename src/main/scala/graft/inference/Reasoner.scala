@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 /** RDFS micro-reasoners over the triple relation — Spark-first
   * re-expressions of the reference's procedures (reference:
   * pidb-rdf-import/src/main/java/semantics/inference/MicroReasoners.java:
-  * getNodesWithLabel :31, getRels :79, hasLabel :101), each a
-  * broadcast semi-join of the data against the materialized
-  * ontology closure instead of a per-query Cypher walk.
+  * getNodesWithLabel :31, getRels :79, hasLabel :101). The label and
+  * relation reasoners filter the data with `isin` on the static
+  * hierarchy that [[Ontology]] closed on the driver, instead of a
+  * per-query Cypher walk: they fire no Spark job of their own.
   */
 object Reasoner {
 
@@ -17,13 +18,11 @@ object Reasoner {
       .select(col("s"), col("o"))
 
   /** Nodes carrying `label` directly or via any subclass of it. */
-  def nodesWithLabel(spark: SparkSession, triples: DataFrame, label: String): DataFrame = {
-    val labels = broadcast(Closure.below(Ontology.subClassDf(spark), label))
+  def nodesWithLabel(spark: SparkSession, triples: DataFrame, label: String): DataFrame =
     typeTriples(triples)
-      .join(labels, col("o") === col("c"), "left_semi")
+      .filter(col("o").isin(Ontology.below(Ontology.subClassClosure, label): _*))
       .select(col("s").as("uri"))
       .distinct()
-  }
 
   /** RDFS entailment rules rdfs2/rdfs3: a property's rdfs:domain
     * types every subject that uses it, its rdfs:range every IRI
@@ -102,18 +101,16 @@ object Reasoner {
     }.reduce(_ unionAll _).distinct()
 
   /** Edges whose relation is `rel` or any subproperty of it. */
-  def rels(spark: SparkSession, edges: DataFrame, rel: String): DataFrame = {
-    val props = broadcast(Closure.below(Ontology.subPropertyDf(spark), rel))
-    edges.join(props, col("rel") === col("c"), "left_semi")
+  def rels(spark: SparkSession, edges: DataFrame, rel: String): DataFrame =
+    edges.filter(col("rel").isin(Ontology.below(Ontology.subPropertyClosure, rel): _*))
       .select(col("src"), col("rel"), col("dst"))
-  }
 
   /** The reference's node-anchored form of [[rels]]: relationships of
     * `rel` or any subproperty touching `node`, direction-filtered —
     * ">" outgoing, "<" incoming, "" both, each row direction-tagged
     * (MicroReasoners.getRels :79-94). The node filter lands on the
-    * edge scan, so only the anchored slice survives the closure
-    * semi-join.
+    * edge scan, so only the anchored slice survives the subproperty
+    * filter.
     */
   def relsOf(spark: SparkSession, edges: DataFrame, node: String,
              rel: String, dir: String = ""): DataFrame = {
@@ -133,8 +130,9 @@ object Reasoner {
     * category below it — the reference's category micro-reasoner
     * (MicroReasoners.getNodesLinkedTo :54-75). Unlike the label
     * reasoners, the hierarchy here is category-to-category edges in
-    * the DATA (`catRel`), not the static ontology; the closure below
-    * `cat` is still ontology-sized, so it broadcasts.
+    * the DATA (`catRel`), not the static ontology, so it closes in
+    * Spark: [[Closure.below]]'s reverse BFS from `cat`, whose result
+    * is category-sized, so it broadcasts.
     */
   def nodesInCategory(spark: SparkSession, edges: DataFrame, cat: String,
                       catRel: String, memberRel: String): DataFrame = {
@@ -148,12 +146,10 @@ object Reasoner {
   }
 
   /** For every typed node: does it carry `label` (incl. implied)? */
-  def hasLabel(spark: SparkSession, triples: DataFrame, label: String): DataFrame = {
-    val labels = Closure.below(Ontology.subClassDf(spark), label)
-      .withColumn("__hit", lit(true))
+  def hasLabel(spark: SparkSession, triples: DataFrame, label: String): DataFrame =
     typeTriples(triples)
-      .join(broadcast(labels), col("o") === col("c"), "left_outer")
       .groupBy(col("s").as("uri"))
-      .agg(max(coalesce(col("__hit"), lit(false))).as("has"))
-  }
+      .agg(max(coalesce(
+        col("o").isin(Ontology.below(Ontology.subClassClosure, label): _*),
+        lit(false))).as("has"))
 }

@@ -1402,6 +1402,10 @@ object Compiler {
     case _: Exists | _: NotExists =>
       throw new IllegalArgumentException(
         "internal: nested EXISTS must be rewritten to markers first")
+    case _: HavingAggCmp =>
+      throw new IllegalStateException(
+        "internal: a HAVING aggregate comparison reached FILTER " +
+          "compilation without being rewritten to its projection alias")
   }
 
   private def containsExists(e: Expr): Boolean = e match {

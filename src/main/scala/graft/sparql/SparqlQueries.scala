@@ -1013,10 +1013,13 @@ object SparqlQueries {
     // The key writes a 3-line N-Triples document, LOADs its file:
     // URL over the dimension store, then proves SILENT swallows a
     // missing source; the loaded slice's per-predicate counts are
-    // data-independent constants
+    // data-independent constants. The lazy LOAD frame reads the file
+    // after the key returns, so its deletion waits for the release
     "sparql_update_load" -> { (s, dir) =>
       val store = graft.rdf.TripleStore.dimensionTriples(s, dir)
-      val f = java.nio.file.Files.createTempFile("graft_load_", ".nt")
+      val f = graft.Checkpoints.track(
+        java.nio.file.Files.createTempFile("graft_load_", ".nt"))(
+        (p, _) => java.nio.file.Files.deleteIfExists(p))
       java.nio.file.Files.write(f,
         ("<nat:901> <rdf:type> <:Nation> .\n" +
           "<nat:901> <:name> \"LEMURIA\" .\n" +

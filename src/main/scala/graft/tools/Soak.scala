@@ -8,9 +8,15 @@ package graft.tools
   *
   * Usage:
   *   runMain graft.tools.Soak <dataDir> <times10> [keys] [reps]
+  * `keys` is a comma list, `bench` (the full benched set) or
+  * `heaviest` (the slowest keys of the last `graft.Bench` sweep, see
+  * [[heaviest]]); omitted, the [[defaultKeys]].
   * e.g. sf10, default keys, 1 rep (the forked JVM already defaults to
   * -Xmx48g via build.sbt — override with SPARK_DRIVER_MEM):
   *   sbt "runMain graft.tools.Soak target/sf10 100"
+  * or warm 3-rep medians of the heaviest sweep keys, the denoised
+  * re-measurement of a noisy sweep:
+  *   sbt "runMain graft.tools.Soak <sfDir> 1 heaviest 3"
   *
   * Timings here measure SCALE SHAPE (ratio vs the sf0.1 bench), not
   * correctness — the DuckDB oracle still gates at sf0.01.
@@ -38,16 +44,38 @@ object Soak {
     "graph_resource_alloc", "data_split_contamination",
     "dedup_shingle_df_profile", "dedup_embedding_sweep")
 
+  /** The keys of a Bench sweep (`bench_latest.json`) that read over
+    * 2 s, slowest first — the set where box noise moves verdicts — or,
+    * when a fast sweep (small SF) leaves that set empty, its 8 slowest
+    * keys. Failed keys (-1) never qualify. The sweep's "queries" object
+    * is read without a JSON library: its keys are benchmark names,
+    * never containing quotes or braces.
+    */
+  private def heaviest(benchJson: String): Seq[String] = {
+    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(benchJson))
+    val start = json.indexOf("\"queries\":{")
+    require(start >= 0, "no \"queries\" object in bench JSON")
+    val body = json.substring(start + "\"queries\":{".length,
+      json.indexOf('}', start))
+    val ranked = """"([^"]+)":(-?[0-9.eE+]+)""".r.findAllMatchIn(body)
+      .map(m => m.group(1) -> m.group(2).toDouble).toSeq
+      .filter(_._2 >= 0).sortBy(-_._2)
+    val over = ranked.takeWhile(_._2 > 2.0)
+    (if (over.nonEmpty) over else ranked.take(8)).map(_._1)
+  }
+
   def main(args: Array[String]): Unit = {
     val dataDir = args(0)
     val times10 = if (args.length > 1) args(1).toInt else 10
     // "bench" soaks the FULL benched key set (r9 task #7: the three
     // real r9 scale cliffs all came from soaks — widen the net past
     // the hand-picked representatives)
-    val keys =
-      if (args.length > 2 && args(2) == "bench") graft.SparkEntry.benchQueries
-      else if (args.length > 2 && args(2).nonEmpty) args(2).split(',').toSeq
-      else defaultKeys
+    val keys = args.lift(2).getOrElse("") match {
+      case "" => defaultKeys
+      case "bench" => graft.SparkEntry.benchQueries
+      case "heaviest" => heaviest("bench_latest.json")
+      case list => list.split(',').toSeq
+    }
     val reps = if (args.length > 3) args(3).toInt else 1
     val spark = graft.Harness.session(32)
 

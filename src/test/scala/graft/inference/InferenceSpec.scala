@@ -23,6 +23,40 @@ class InferenceSpec extends AnyFunSuite {
     assert(Closure.below(edges, "b").as[String].collect().toSet == Set("a", "b"))
   }
 
+  test("driver closure equals Closure.transitive, and terminates on a cycle") {
+    def sparkClosure(pairs: Seq[(String, String)]) =
+      Closure.transitive(pairs.toDF("sub", "sup")).as[(String, String)].collect().toSet
+    val cyclic = Seq(("a", "b"), ("b", "a"), ("b", "c"))
+    for (pairs <- Seq(Ontology.subClassOf, Ontology.subPropertyOf, cyclic))
+      assert(Ontology.close(pairs) == sparkClosure(pairs))
+    assert(Ontology.close(cyclic) == Set(
+      ("a", "b"), ("b", "a"), ("b", "c"), ("a", "a"), ("b", "b"), ("a", "c")))
+    assert(Ontology.below(Ontology.subClassClosure, ":Agent") ==
+      Seq(":Agent", ":Customer", ":Supplier"))
+  }
+
+  test("nodesWithLabel fires no Spark job until its result is collected") {
+    import org.apache.spark.graft.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val t = Seq(("c:1", "rdf:type", ":Customer"), ("p:1", "rdf:type", ":Part"))
+      .map { case (a, b, c) => (a, b, c, Option.empty[Double], true, Option.empty[String]) }
+      .toDF("s", "p", "o", "o_num", "o_is_iri", "lang")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    val labelled = try {
+      val df = Reasoner.nodesWithLabel(spark, t, ":Agent")
+      ListenerBusDrain.drain(sc)
+      df
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0)
+    assert(labelled.as[String].collect().toSet == Set("c:1"))
+  }
+
   test("importLite types meta-nodes and falls back to local names") {
     val t = Seq(
       ("o:C1", "rdf:type", "owl:Class", Option.empty[Double], true, Option.empty[String]),

@@ -909,46 +909,59 @@ class CompilerSpec extends AnyFunSuite {
   test("LOAD executes: file URL, INTO GRAPH, SILENT, format inference") {
     import java.nio.file.Files
     val ttl = Files.createTempFile("graft_load_spec_", ".ttl")
-    Files.write(ttl,
-      ("@prefix ex: <http://x/> .\n" +
-        "ex:a ex:p ex:b .\n" +
-        "ex:a ex:q \"lit\" .\n").getBytes("UTF-8"))
-    // triple-store LOAD: .ttl dispatches the Turtle parser
-    val store0 = triples
-    val loaded = graft.Graft.update(store0, "LOAD <file://" + ttl + ">")
-    assert(loaded.count() == store0.count() + 2)
-    assert(loaded.filter($"s" === "http://x/a").count() == 2)
-    // SILENT swallows a missing source; non-SILENT must throw
-    assert(graft.Graft.update(loaded,
-      "LOAD SILENT <file:///no/such/file.nt>").count() == loaded.count())
-    intercept[Exception] {
-      graft.Graft.update(loaded, "LOAD <file:///no/such/file.nt>").count()
-    }
-    // unknown extension is a pointed error
-    intercept[IllegalArgumentException] {
-      graft.Graft.update(loaded, "LOAD <file:///d/x.dat>")
-    }
-    // quad-store LOAD INTO GRAPH: the destination overrides
-    val quads = triples.withColumn("g", org.apache.spark.sql.functions.lit("g:base"))
-    val q2 = graft.Graft.updateQuads(quads,
-      "LOAD <file://" + ttl + "> INTO GRAPH <urn:gl>")
-    assert(q2.filter($"g" === "urn:gl").count() == 2)
-    assert(q2.count() == quads.count() + 2)
-    // set semantics: re-loading the same document into the same graph
-    // is idempotent (the store's no-duplicate-quads invariant, like
-    // TripleOps.addGraph) — and only the destination slice deduped
-    val q3 = graft.Graft.updateQuads(q2,
-      "LOAD <file://" + ttl + "> INTO GRAPH <urn:gl>")
-    assert(q3.count() == q2.count())
-    assert(q3.filter($"g" === "urn:gl").count() == 2)
-    // plain LOAD on a quad relation: valid SPARQL (default-graph
-    // target) but the quad model's default graph is the read-time
-    // union — pointed error naming INTO GRAPH, not a generic mismatch
-    val e = intercept[IllegalArgumentException] {
-      graft.Graft.updateQuads(quads, "LOAD <file://" + ttl + ">")
-    }
-    assert(e.getMessage.contains("INTO GRAPH"))
+    try {
+      Files.write(ttl,
+        ("@prefix ex: <http://x/> .\n" +
+          "ex:a ex:p ex:b .\n" +
+          "ex:a ex:q \"lit\" .\n").getBytes("UTF-8"))
+      // triple-store LOAD: .ttl dispatches the Turtle parser
+      val store0 = triples
+      val loaded = graft.Graft.update(store0, "LOAD <file://" + ttl + ">")
+      assert(loaded.count() == store0.count() + 2)
+      assert(loaded.filter($"s" === "http://x/a").count() == 2)
+      // SILENT swallows a missing source; non-SILENT must throw
+      assert(graft.Graft.update(loaded,
+        "LOAD SILENT <file:///no/such/file.nt>").count() == loaded.count())
+      intercept[Exception] {
+        graft.Graft.update(loaded, "LOAD <file:///no/such/file.nt>").count()
+      }
+      // unknown extension is a pointed error
+      intercept[IllegalArgumentException] {
+        graft.Graft.update(loaded, "LOAD <file:///d/x.dat>")
+      }
+      // quad-store LOAD INTO GRAPH: the destination overrides
+      val quads = triples.withColumn("g", org.apache.spark.sql.functions.lit("g:base"))
+      val q2 = graft.Graft.updateQuads(quads,
+        "LOAD <file://" + ttl + "> INTO GRAPH <urn:gl>")
+      assert(q2.filter($"g" === "urn:gl").count() == 2)
+      assert(q2.count() == quads.count() + 2)
+      // set semantics: re-loading the same document into the same graph
+      // is idempotent (the store's no-duplicate-quads invariant, like
+      // TripleOps.addGraph) — and only the destination slice deduped
+      val q3 = graft.Graft.updateQuads(q2,
+        "LOAD <file://" + ttl + "> INTO GRAPH <urn:gl>")
+      assert(q3.count() == q2.count())
+      assert(q3.filter($"g" === "urn:gl").count() == 2)
+      // plain LOAD on a quad relation: valid SPARQL (default-graph
+      // target) but the quad model's default graph is the read-time
+      // union — pointed error naming INTO GRAPH, not a generic mismatch
+      val e = intercept[IllegalArgumentException] {
+        graft.Graft.updateQuads(quads, "LOAD <file://" + ttl + ">")
+      }
+      assert(e.getMessage.contains("INTO GRAPH"))
+      graft.Checkpoints.releaseCaches()
+    } finally Files.deleteIfExists(ttl)
+  }
+
+  test("sparql_update_load deletes its LOAD file at the release") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def loadFiles = tmp.list().count(_.startsWith("graft_load_"))
+    val before = loadFiles
+    val counts = graft.SparkEntry.queries("sparql_update_load")(spark, SharedSpark.sfDir)
+      .collect()
+    assert(counts.nonEmpty)
     graft.Checkpoints.releaseCaches()
+    assert(loadFiles == before)
   }
 
   test("WITH / USING scope the template modify (SPARQL Update §3.1.3)") {
