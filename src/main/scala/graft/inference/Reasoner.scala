@@ -130,9 +130,10 @@ object Reasoner {
     * category below it — the reference's category micro-reasoner
     * (MicroReasoners.getNodesLinkedTo :54-75). Unlike the label
     * reasoners, the hierarchy here is category-to-category edges in
-    * the DATA (`catRel`), not the static ontology, so it closes in
-    * Spark: [[Closure.below]]'s reverse BFS from `cat`, whose result
-    * is category-sized, so it broadcasts.
+    * the DATA (`catRel`), not the static ontology, so it closes per
+    * call: [[Closure.below]]'s reverse BFS from `cat` runs on the
+    * driver when the category edges are few (a local relation), else
+    * in Spark; either result is category-sized, so it broadcasts.
     */
   def nodesInCategory(spark: SparkSession, edges: DataFrame, cat: String,
                       catRel: String, memberRel: String): DataFrame = {

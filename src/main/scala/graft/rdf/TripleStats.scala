@@ -33,6 +33,17 @@ object TripleStats {
     */
   final case class PredStat(n: Long, nSubjects: Long, nObjects: Long)
 
+  /** A relation of at most this many rows is small enough to hold
+    * whole in one JVM: the SPARQL compiler broadcast-hints a pattern
+    * scan estimated at or under it (its join never shuffles the big
+    * side; AQE still upgrades larger sides at runtime when their
+    * measured size allows), and a seeded [[graft.inference.Closure]]
+    * walks an edge relation of at most this many rows on the driver.
+    * Sized so such a relation (2-4 short string columns) stays well
+    * under a 10 MB broadcast budget.
+    */
+  val smallRows = 100000L
+
   // weak identity keys (Dataset does not override equals): entries
   // die with the registered frame — which TripleStore caches for the
   // session's lifetime — so no session outlives its stats

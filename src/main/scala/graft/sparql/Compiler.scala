@@ -215,14 +215,6 @@ object Compiler {
     n / sFactor / oFactor
   }
 
-  /** A pattern scan estimated at or under this many rows gets a
-    * broadcast hint: its join never shuffles the big side. Sized so
-    * the hinted relation (3-4 short string columns) stays well under
-    * a 10 MB broadcast budget; AQE still upgrades larger sides to
-    * broadcast at runtime when their measured size allows.
-    */
-  private val broadcastRows = 100000L
-
   /** Stats phase 2 (r16): estimated OUTPUT rows of a whole BGP under
     * the uniformity join model (System-R): patterns fold in
     * [[orderPatterns]] order; each join on a shared variable divides
@@ -302,7 +294,7 @@ object Compiler {
     */
   private def hintSmallSide(triples: DataFrame, p: Pattern,
                             df: DataFrame): DataFrame =
-    if (estimatePatternRows(triples, p).exists(_ <= broadcastRows))
+    if (estimatePatternRows(triples, p).exists(_ <= graft.rdf.TripleStats.smallRows))
       broadcast(df)
     else df
 
@@ -834,7 +826,7 @@ object Compiler {
           val total = stats.valuesIterator.map(_.n).sum
           ordered.map { tp =>
             val df = patternDf(triples, tp)
-            if (estimateRows(stats, total, tp) <= broadcastRows)
+            if (estimateRows(stats, total, tp) <= graft.rdf.TripleStats.smallRows)
               broadcast(df)
             else df
           }
@@ -2559,9 +2551,10 @@ object Compiler {
 
   /** [[plusPairsOver]] under a variable graph: the var-var closure is
     * per-graph for free on encoded edges; a BOUND endpoint seeds one
-    * frontier per named graph (the seeds FRAME — graph names never
-    * collect to the driver) and each reached node reconstructs its
-    * seed from its own graph half.
+    * frontier per named graph (the seeds FRAME — graph names collect
+    * to the driver only when the edges are small enough for the
+    * driver BFS) and each reached node reconstructs its seed from its
+    * own graph half.
     */
   private def plusPairsOverG(graphs: DataFrame, encEdges: DataFrame,
                              s: Term, o: Term): DataFrame = (s, o) match {

@@ -20,6 +20,10 @@ package graft.tools
   *
   * Timings here measure SCALE SHAPE (ratio vs the sf0.1 bench), not
   * correctness — the DuckDB oracle still gates at sf0.01.
+  * Per-key medians compare only across runs with the identical key
+  * list, because a key's time depends on the keys run before it in
+  * the same JVM: at sf0.1 `infer_nodes_in_category` read 0.8 s after
+  * four other inference keys and 3.3 s alone.
   */
 object Soak {
 

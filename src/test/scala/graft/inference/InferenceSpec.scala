@@ -23,6 +23,62 @@ class InferenceSpec extends AnyFunSuite {
     assert(Closure.below(edges, "b").as[String].collect().toSet == Set("a", "b"))
   }
 
+  test("seeded closures: the driver and Spark regimes give identical rows") {
+    // budget 0 forces the Spark frontier BFS (every graph has an edge);
+    // the shared budget runs the BFS on the driver
+    val budget = graft.rdf.TripleStats.smallRows
+    val graphs = Seq(
+      Seq(("a", "b"), ("b", "c"), ("c", "d")),               // chain
+      Seq(("a", "b"), ("b", "c"), ("c", "a")),               // cycle back to the seed
+      Seq(("a", "a"), ("a", "b")),                           // self-loop
+      Seq(("a", "b1"), ("a", "b2"), ("b1", "c"), ("b2", "c")), // diamond
+      Seq(("b", "a"), ("c", "b")),                           // seed with no out-edges
+      Seq(("a", "b"), ("b", null), ("x", "a"), (null, "a"))) // null endpoints
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(r => Option(r.getString(0))).sorted
+    val seeds = Seq("a", "q").toDF("src")
+    for (g <- graphs) {
+      val edges = g.toDF("sub", "sup")
+      for ((driver, inSpark) <- Seq(
+        Closure.reachableFrom(edges, "a", budget) -> Closure.reachableFrom(edges, "a", 0),
+        Closure.reachableFromAny(edges, seeds, budget) ->
+          Closure.reachableFromAny(edges, seeds, 0),
+        Closure.below(edges, "a", budget) -> Closure.below(edges, "a", 0))) {
+        assert(driver.isLocal && !inSpark.isLocal, g)
+        assert(rows(driver) == rows(inSpark), g)
+        assert(driver.schema == inSpark.schema, g)
+      }
+    }
+    val cycle = graphs(1).toDF("sub", "sup")
+    assert(rows(Closure.reachableFrom(cycle, "a")).flatten == Seq("a", "b", "c"))
+    graft.Checkpoints.releaseCaches()
+  }
+
+  test("a seeded closure over a small relation fires at most 2 jobs and checkpoints nothing") {
+    import org.apache.spark.graft.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // three partitions, so the bounded fetch is a real scan, not a
+    // local relation the planner answers without a job
+    val edges = sc.parallelize(Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")), 3)
+      .toDF("sub", "sup")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    val persisted = sc.getPersistentRDDs.keySet
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    val got = try {
+      val r = Closure.reachableFrom(edges, "a").as[String].collect().toSet
+      ListenerBusDrain.drain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(got == Set("a", "b", "c", "d"))
+    assert(jobs.get <= 2, s"${jobs.get} jobs")
+    assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty)
+  }
+
   test("driver closure equals Closure.transitive, and terminates on a cycle") {
     def sparkClosure(pairs: Seq[(String, String)]) =
       Closure.transitive(pairs.toDF("sub", "sup")).as[(String, String)].collect().toSet
