@@ -4,8 +4,8 @@ import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
 import org.apache.spark.graphx.lib.ShortestPaths
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
-import graft.Checkpoints
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import graft.{Checkpoints, Regime}
 import graft.functions.FastHash.md5 // shadows functions.md5 → Md5Fast (r19)
 
 /** GraphX analytics over the RDF edge set — the north star's "GraphX
@@ -13,6 +13,15 @@ import graft.functions.FastHash.md5 // shadows functions.md5 → Md5Fast (r19)
   * xxhash64 (collision chance ~n^2/2^64 — negligible below trillions
   * of nodes); every result joins back to URIs so downstream stays in
   * DataFrame land.
+  *
+  * The physical plan follows the size of the edge set (Pregelix,
+  * VLDB 2014). Connected components, PageRank, k-core and resource
+  * allocation first pass their (src, dst) relation through
+  * [[graft.Regime]]: an edge set within its budget (every benchmark
+  * graph at sf0.001, the geo graphs through sf0.1) runs on the driver
+  * in [[LocalGraph]] and returns a local relation with the same rows
+  * and field types, and a larger one runs the Spark side below over the
+  * relation the gate persisted.
   */
 object Analytics {
 
@@ -66,19 +75,47 @@ object Analytics {
         coalesce(col("outdeg"), lit(0)).as("outdeg"))
   }
 
-  /** Connected components; component named by its min URI (stable
-    * across runs, unlike GraphX's min-vertex-id label).
+  /** `edges`' endpoints as one field named `name`: the vertex field
+    * the results below carry. Analysis only, no job.
     */
-  def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val (verts, g) = build(spark, edges)
-    val cc = spark.createDataFrame(
-      Checkpoints.track(g.connectedComponents())(_.unpersist(_))
-        .vertices).toDF("id", "comp_id")
-    verts.join(cc, Seq("id"))
-      .groupBy(col("comp_id"))
-      .agg(min(col("uri")).as("comp"), count(lit(1)).as("size"))
-      .select(col("comp"), col("size"))
-  }
+  private def endpointField(edges: DataFrame, name: String): StructField =
+    edges.select(col("src").as(name))
+      .unionAll(edges.select(col("dst").as(name))).schema.head
+
+  /** The regime gate ([[graft.Regime]]) over `edges`' (src, dst) rows:
+    * `local` answers from a [[LocalGraph]] of them when they fit,
+    * `inSpark` from the persisted relation when they do not.
+    */
+  private def gated(edges: DataFrame, budget: Long)(local: LocalGraph => DataFrame)
+                   (inSpark: DataFrame => DataFrame): DataFrame =
+    Regime.fetchIfSmall(edges.select(col("src"), col("dst")), budget) match {
+      case Right(rows) => local(new LocalGraph(rows, endpointField(edges, "v").dataType))
+      case Left(kept) => inSpark(kept)
+    }
+
+  /** Connected components; component named by its min URI (stable
+    * across runs, unlike GraphX's min-vertex-id label). Union-find on
+    * the driver when the edges fit the regime gate, GraphX otherwise.
+    */
+  def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame =
+    connectedComponents(spark, edges, Regime.budget)
+
+  private[graft] def connectedComponents(spark: SparkSession, edges: DataFrame,
+                                         budget: Long): DataFrame =
+    gated(edges, budget) { g =>
+      Regime.localRelation(edges, StructType(Seq(
+        endpointField(edges, "comp").copy(nullable = true),
+        StructField("size", LongType, nullable = false))), g.connectedComponents)
+    } { kept =>
+      val (verts, g) = build(spark, kept)
+      val cc = spark.createDataFrame(
+        Checkpoints.track(g.connectedComponents())(_.unpersist(_))
+          .vertices).toDF("id", "comp_id")
+      verts.join(cc, Seq("id"))
+        .groupBy(col("comp_id"))
+        .agg(min(col("uri")).as("comp"), count(lit(1)).as("size"))
+        .select(col("comp"), col("size"))
+    }
 
   /** Connected components over NUMERIC-id edges (src, dst): returns
     * (id, comp) where comp is the component's minimum vertex id
@@ -95,7 +132,9 @@ object Analytics {
     // layout (a filtered slice of the spread cached store arrives with
     // cores×legs partitions), and Pregel pays a fixed per-partition
     // cost per superstep — unsized, the sameAs CC measured 12× slower
-    // purely from tiny-task scheduling (r19)
+    // purely from tiny-task scheduling (r19). The sameAs caller only
+    // comes here over the regime gate's budget; a smaller link set
+    // clusters on the driver ([[LocalGraph.canonicalMap]])
     val nParts = math.max(4, math.min(
       spark.sparkContext.defaultParallelism,
       (edgeRdd0.count() / 500000L).toInt + 1))
@@ -127,9 +166,22 @@ object Analytics {
     * round-sized — the iterative-DataFrame idiom that scales with AQE
     * picking the join strategy per round as the graph shrinks. The
     * convergence count() per round is free: it reads the
-    * just-materialized checkpoint.
+    * just-materialized checkpoint. Edges that fit the regime gate peel
+    * on the driver instead ([[LocalGraph.kCore]]), counting rounds the
+    * same way.
     */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 10000): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 10000): DataFrame =
+    kCore(edges, k, maxRounds, Regime.budget)
+
+  private[graft] def kCore(edges: DataFrame, k: Int, maxRounds: Int,
+                           budget: Long): DataFrame =
+    gated(edges, budget) { g =>
+      val (core, rounds) = g.kCore(k, maxRounds)
+      lastKCoreRounds = rounds
+      Regime.localRelation(edges, StructType(Seq(endpointField(edges, "uri"))), core)
+    }(sparkKCore(_, k, maxRounds))
+
+  private def sparkKCore(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     // precondition: `edges` is DISTINCT and canonical (one row per
     // undirected edge, src < dst) — then the doubled relation is
     // distinct by construction and no dedup shuffle is needed. Peel
@@ -447,10 +499,23 @@ object Analytics {
     * vertex set — the canonical distributed PageRank data flow. The
     * edge list, vertex set, and out-degrees are localCheckpoint()ed
     * once and reused every iteration, and each rank generation is
-    * checkpointed so the plan stays iteration-sized.
+    * checkpointed so the plan stays iteration-sized. Edges that fit
+    * the regime gate run the same supersteps on the driver
+    * ([[LocalGraph.pageRank]]), bit-identically.
     */
   def pageRank(spark: SparkSession, edges: DataFrame, iters: Int,
-               scale: Long = 1000000000L): DataFrame = {
+               scale: Long = 1000000000L): DataFrame =
+    pageRank(spark, edges, iters, scale, Regime.budget)
+
+  private[graft] def pageRank(spark: SparkSession, edges: DataFrame, iters: Int,
+                              scale: Long, budget: Long): DataFrame =
+    gated(edges, budget) { g =>
+      Regime.localRelation(edges, StructType(Seq(endpointField(edges, "uri"),
+        // Spark types a `div` nullable; zero iterations leave the literal
+        StructField("rank", LongType, nullable = iters > 0))), g.pageRank(iters, scale))
+    }(sparkPageRank(_, iters, scale))
+
+  private def sparkPageRank(edges: DataFrame, iters: Int, scale: Long): DataFrame = {
     val e = Checkpoints.tracked(edges.select(col("src"), col("dst")))
     // vertex set partitioned by its join key: the per-iteration
     // verts⋈msgs left join then lines up with the message
@@ -518,48 +583,48 @@ object Analytics {
   /** The priced wedge-volume gate shared by every wedge self-join in
     * this file (the dedup-containment idiom on the graph side): the
     * enumeration emits Σ deg(w)·(deg(w)−1)/2 pairs, priced by one
-    * metadata-scale fold over the degree HISTOGRAM before the join
-    * launches. Within budget → no cap (exact enumeration). Over
-    * budget → the middle-degree cap tightens to the largest degree
-    * whose cumulative volume (low-degree-first) fits, so hub middles
-    * — the ones a power-law graph concentrates its d² wedges in —
-    * are dropped first, and the chosen cap is computed, not guessed.
-    * `degW` must carry a `degw` column (one row per middle vertex).
+    * metadata-scale action, the degree HISTOGRAM collected before the
+    * join launches, and capped by [[wedgeCap]]. A budget of 0 or less
+    * means no cap and prices nothing.
+    * `degW` must carry `mw` and `degw` columns (one row per middle vertex).
     */
   private final case class WedgeGate(cap: Long, packIds: Boolean)
 
   private def pricedWedgeCap(degW: DataFrame, wedgeBudget: Long,
-                             who: String): WedgeGate = {
-    import org.apache.spark.sql.expressions.Window
-    // ONE vocabulary-scale action prices the total volume AND
-    // witnesses the id range (r20): non-negative ids below 2³¹ let
-    // every wedge consumer carry its (u,v) pair as ONE packed long —
-    // half the aggregation-key bytes through the wedge exchange
-    // (guide §2.3 "narrower types"). Middle ids cover ALL vertex ids
-    // (the adjacency is the two-orientation union), so the witness
-    // covers the spoke columns too.
-    val row = degW.agg(
-      sum(expr("(degw * (degw - 1)) div 2")),
-      min(col("mw").cast("long")), max(col("mw").cast("long"))).head()
-    val t = if (row.isNullAt(0)) 0L else row.getLong(0)
-    val packIds = !row.isNullAt(1) && row.getLong(1) >= 0 &&
-      row.getLong(2) < (1L << 31)
-    if (wedgeBudget <= 0 || t <= wedgeBudget) WedgeGate(Long.MaxValue, packIds)
+                             who: String): WedgeGate =
+    if (wedgeBudget <= 0) WedgeGate(Long.MaxValue, packIds = false)
     else {
-      val perDeg = degW.groupBy(col("degw")).agg(count(lit(1)).as("nv"))
-        .withColumn("vol", col("nv") * expr("(degw * (degw - 1)) div 2"))
-      val one = substring(col("degw").cast("string"), 0, 0)
-      val cum = perDeg.withColumn("cumvol", sum(col("vol")).over(
-        Window.partitionBy(one).orderBy(col("degw"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val fit = cum.filter(col("cumvol") <= wedgeBudget)
-        .agg(max(col("degw"))).head()
-      val c = if (fit.isNullAt(0)) 1L else fit.getLong(0)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$who: wedge volume $t over budget $wedgeBudget — " +
-          s"middle-degree cap set to $c (hub middles dropped)")
-      WedgeGate(c, packIds)
+      // the same action witnesses the id range (r20): non-negative ids
+      // below 2³¹ let every wedge consumer carry its (u,v) pair as ONE
+      // packed long — half the aggregation-key bytes through the wedge
+      // exchange (guide §2.3 "narrower types"). Middle ids cover ALL
+      // vertex ids (the adjacency is the two-orientation union), so
+      // the witness covers the spoke columns too.
+      val hist = degW.groupBy(col("degw")).agg(count(lit(1)),
+        min(col("mw").cast("long")), max(col("mw").cast("long"))).collect()
+      val cap = wedgeCap(hist.map(r => r.getLong(0) -> r.getLong(1)).toMap, wedgeBudget)
+      val lo = hist.filterNot(_.isNullAt(2)).map(_.getLong(2))
+      val hi = hist.filterNot(_.isNullAt(3)).map(_.getLong(3))
+      if (cap < Long.MaxValue)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"$who: wedge volume over budget $wedgeBudget — " +
+            s"middle-degree cap set to $cap (hub middles dropped)")
+      WedgeGate(cap, lo.nonEmpty && lo.min >= 0 && hi.max < (1L << 31))
     }
+
+  /** The middle-degree cap for a degree histogram (degree → vertices
+    * of that degree), shared by the Spark gate and the driver's
+    * [[LocalGraph.resourceAllocation]]. Within budget → no cap (exact
+    * enumeration). Over budget → the largest degree whose cumulative
+    * wedge volume (low-degree-first) fits, at least 1, so hub middles
+    * — the ones a power-law graph concentrates its d² wedges in — are
+    * dropped first, and the cap is computed, not guessed.
+    */
+  private[graphx] def wedgeCap(hist: Map[Long, Long], wedgeBudget: Long): Long = {
+    val vol = hist.toSeq.sorted.map { case (d, nv) => d -> nv * (d * (d - 1) / 2) }
+    val cum = vol.map(_._2).scanLeft(0L)(_ + _).tail
+    if (wedgeBudget <= 0 || cum.lastOption.forall(_ <= wedgeBudget)) Long.MaxValue
+    else vol.zip(cum).takeWhile(_._2 <= wedgeBudget).lastOption.fold(1L)(_._1._1)
   }
 
   /** (u << 32) | v — injective for the id range [[pricedWedgeCap]]
@@ -704,9 +769,31 @@ object Analytics {
     * over low degrees (cap deg<=138 still kept 98M wedges, ~18s
     * warm), while 1e7 keeps 9.6M (deg<=93) and the whole key drops
     * under the bench's 5s bar with a near-identical top-k.
+    *
+    * Edges that fit the regime gate enumerate wedges on the driver
+    * ([[LocalGraph.resourceAllocation]]) under the same cap; a run
+    * whose distinct pairs pass the gate's budget falls back here.
     */
   def resourceAllocation(edges: DataFrame, k: Int = 20,
-                         wedgeBudget: Long = 10000000L): DataFrame = {
+                         wedgeBudget: Long = 10000000L): DataFrame =
+    resourceAllocation(edges, k, wedgeBudget, Regime.budget)
+
+  private[graft] def resourceAllocation(edges: DataFrame, k: Int, wedgeBudget: Long,
+                                        budget: Long): DataFrame =
+    gated(edges, budget) { g =>
+      g.resourceAllocation(k, wedgeBudget, budget).fold(
+        sparkResourceAllocation(edges, k, wedgeBudget)) { top =>
+        val e = canonicalUndirected(edges)
+        val v = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
+          .schema.head
+        Regime.localRelation(edges, StructType(Seq(v.copy(name = "u"), v,
+          StructField("ra_e9", LongType, nullable = true),
+          StructField("cn", LongType, nullable = false))), top)
+      }
+    }(sparkResourceAllocation(_, k, wedgeBudget))
+
+  private def sparkResourceAllocation(edges: DataFrame, k: Int,
+                                      wedgeBudget: Long): DataFrame = {
     // materialize the shared relations ONCE (r19, guide §2.4/§5) —
     // same reuse structure as [[commonNeighbors]]: edge set (two
     // adjacency orientations + final anti-join), degree table (the

@@ -23,9 +23,10 @@ object GraphQueries {
 
   /** Canonical (src < dst) distinct co-order part edges on LONG keys —
     * numeric ids keep the iterative consumers' shuffles cheap; string
-    * URIs are minted only at output time.
+    * URIs are minted only at output time. PlanSpec builds the Spark
+    * side of the wedge keys on it.
     */
-  private def coOrderPartEdgeKeys(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def coOrderPartEdgeKeys(s: SparkSession, dir: String): DataFrame = {
     val pp = Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
     pp.as("a").join(pp.as("b"),

@@ -1,12 +1,10 @@
 package graft.inference
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
-import graft.Checkpoints
-import graft.rdf.TripleStats
+import graft.{Checkpoints, Regime}
 
 /** Closures over DATA-scale (sub, sup) edge relations: the SPARQL
   * property paths and the data-side hierarchies (category edges,
@@ -19,21 +17,20 @@ import graft.rdf.TripleStats
   *  - [[transitive]] closes the whole relation by path doubling
   *    (O(log diameter) rounds), for var–var paths;
   *  - a bound endpoint ([[reachableFrom]], [[reachableFromAny]],
-  *    [[below]]) over at most [[graft.rdf.TripleStats.smallRows]]
-  *    edges runs its BFS on the driver and returns the reached set as
-  *    a local relation: no checkpoint, no job per round;
+  *    [[below]]) over at most [[graft.Regime.budget]] edges runs its
+  *    BFS on the driver and returns the reached set as a local
+  *    relation: no checkpoint, no job per round;
   *  - a bound endpoint over more edges runs one frontier BFS in
   *    Spark, which touches only the seed's neighborhood.
   * Both Spark loops are driver-driven and cut the growing lineage
   * with a tracked localCheckpoint ([[graft.Checkpoints]]).
   *
-  * The gate between the two seeded regimes is one bounded fetch of
-  * the edge rows (`limit(budget + 1)`): it prices the relation and
-  * gets its rows in the same action, so it needs no statistics and
-  * works on frames TripleStats never registers (property-graph
+  * The gate between the two seeded regimes is [[graft.Regime]], the
+  * one gate the graph operators share: one action prices the
+  * (sub, sup) relation and gets its rows, so it needs no statistics
+  * and works on frames TripleStats never registers (property-graph
   * edges, composed sequence edges, graph-encoded edges). Over the
-  * budget, that fetch (at most budget + 1 rows) is the whole extra
-  * cost before the Spark loop.
+  * budget the frontier BFS reads the relation that action persisted.
   */
 object Closure {
 
@@ -62,11 +59,11 @@ object Closure {
     * column, "sup".
     */
   def reachableFrom(edges: DataFrame, src: String): DataFrame =
-    reachableFrom(edges, src, TripleStats.smallRows)
+    reachableFrom(edges, src, Regime.budget)
 
   private[inference] def reachableFrom(edges: DataFrame, src: String,
                                        budget: Long): DataFrame =
-    seeded(edges, budget, Seq(src), edges.filter(col("sub") === src))
+    seeded(edges, budget, Seq(src), _.filter(col("sub") === src))
 
   /** Nodes reachable in one or more hops from ANY seed — the
     * multi-seed twin of [[reachableFrom]], with the seed SET joined in
@@ -79,13 +76,13 @@ object Closure {
     * one).
     */
   def reachableFromAny(edges: DataFrame, seeds: DataFrame): DataFrame =
-    reachableFromAny(edges, seeds, TripleStats.smallRows)
+    reachableFromAny(edges, seeds, Regime.budget)
 
   private[inference] def reachableFromAny(edges: DataFrame, seeds: DataFrame,
                                           budget: Long): DataFrame = {
     val srcs = seeds.select(col("src")).distinct()
     seeded(edges, budget, srcs.collect().map(_.get(0)).toSeq,
-      edges.join(broadcast(srcs), col("sub") === col("src")))
+      _.join(broadcast(srcs), col("sub") === col("src")))
   }
 
   /** Reflexive-transitive sub-closure seeded at `top`: `top` itself
@@ -93,18 +90,18 @@ object Closure {
     * edges. One column, "c".
     */
   def below(edges: DataFrame, top: String): DataFrame =
-    below(edges, top, TripleStats.smallRows)
+    below(edges, top, Regime.budget)
 
   private[inference] def below(edges: DataFrame, top: String,
                                budget: Long): DataFrame = {
     val flipped = edges.select(col("sup").as("sub"), col("sub").as("sup"))
     val topRow = edges.sparkSession.createDataFrame(Seq(Tuple1(top))).toDF("c")
-    driverReach(flipped, budget, Seq(top)) match {
-      case Some(reached) =>
+    Regime.fetchIfSmall(flipped, budget) match {
+      case Right(rows) =>
         val c = flipped.select(col("sup").as("c")).union(topRow).schema.head
-        localRelation(edges, c, (top +: reached).distinct)
-      case None =>
-        frontierBfs(flipped, flipped.filter(col("sub") === top))
+        localRelation(edges, c, (top +: driverReach(rows, Seq(top))).distinct)
+      case Left(kept) =>
+        frontierBfs(kept, kept.filter(col("sub") === top))
           .select(col("sup").as("c"))
           .union(topRow)
           .distinct()
@@ -112,44 +109,37 @@ object Closure {
   }
 
   /** A seeded closure through the regime gate: the driver BFS from
-    * `seeds` when [[driverReach]] fits, else the Spark frontier BFS
-    * from `firstHop` (the seeds' outgoing edges). Both give one
-    * column, `edges`' own "sup" field.
+    * `seeds` when the (sub, sup) rows fit, else the Spark frontier BFS
+    * from `firstHop` of the persisted relation (the seeds' outgoing
+    * edges). Both give one column, `edges`' own "sup" field.
     */
   private def seeded(edges: DataFrame, budget: Long, seeds: => Seq[Any],
-                     firstHop: => DataFrame): DataFrame =
-    driverReach(edges, budget, seeds) match {
-      case Some(reached) =>
-        localRelation(edges, edges.select(col("sup")).schema.head, reached)
-      case None => frontierBfs(edges, firstHop)
+                     firstHop: DataFrame => DataFrame): DataFrame =
+    Regime.fetchIfSmall(edges.select(col("sub"), col("sup")), budget) match {
+      case Right(rows) =>
+        localRelation(edges, edges.select(col("sup")).schema.head,
+          driverReach(rows, seeds))
+      case Left(kept) => frontierBfs(kept, firstHop(kept))
     }
 
-  /** The regime gate: fetch at most `budget` + 1 (sub, sup) rows. When
-    * no more than `budget` come back, BFS them on the driver and return
-    * the nodes reached from `seeds` in one or more hops, as
-    * [[frontierBfs]] would (a null sub matches nothing; a null sup is
-    * reached but never expanded); otherwise None.
+  /** The nodes reached from `seeds` in one or more hops over the
+    * fetched (sub, sup) `rows`, as [[frontierBfs]] would reach them (a
+    * null sub matches nothing; a null sup is reached but never
+    * expanded).
     */
-  private def driverReach(edges: DataFrame, budget: Long,
-                          seeds: => Seq[Any]): Option[Seq[Any]] = {
-    val rows = edges.select(col("sub"), col("sup"))
-      .limit(Math.toIntExact(budget + 1)).collect()
-    if (rows.length > budget) None
-    else {
-      val out = rows.toSeq.filterNot(_.isNullAt(0)).groupMap(_.get(0))(_.get(1))
-      val reached = mutable.LinkedHashSet.empty[Any]
-      var frontier = seeds
-      while (frontier.nonEmpty)
-        frontier = frontier.flatMap(out.getOrElse(_, Nil)).filter(reached.add)
-      Some(reached.toSeq)
-    }
+  private def driverReach(rows: Array[Row], seeds: Seq[Any]): Seq[Any] = {
+    val out = rows.toSeq.filterNot(_.isNullAt(0)).groupMap(_.get(0))(_.get(1))
+    val reached = mutable.LinkedHashSet.empty[Any]
+    var frontier = seeds
+    while (frontier.nonEmpty)
+      frontier = frontier.flatMap(out.getOrElse(_, Nil)).filter(reached.add)
+    reached.toSeq
   }
 
   /** `values` as a one-column local relation of type `field`. */
   private def localRelation(edges: DataFrame, field: StructField,
                             values: Seq[Any]): DataFrame =
-    edges.sparkSession.createDataFrame(values.map(Row(_)).asJava,
-      StructType(Seq(field)))
+    Regime.localRelation(edges, StructType(Seq(field)), values.map(Row(_)))
 
   /** The Spark frontier BFS behind a seeded closure over more edges
     * than the budget: `firstHop` holds the seeds' outgoing edges; each

@@ -1,8 +1,10 @@
 package graft.inference
 
-import graft.graphx.Analytics
+import graft.{Checkpoints, Regime}
+import graft.graphx.{Analytics, LocalGraph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** owl:sameAs identity resolution ("smushing"): every sameAs-connected
   * cluster of URIs collapses onto one canonical representative — the
@@ -13,11 +15,15 @@ import org.apache.spark.sql.functions._
   * under different URIs).
   *
   * Scale shape: connected components run on the sameAs edge set ONLY
-  * (tiny next to the store — identity links, not data), the
-  * (uri → canon) map is one narrow relation, and the rewrite is two
-  * key-equi left joins against the store (subject, then IRI objects)
-  * plus one set-dedup of the merged result. All shuffles are keyed by
-  * URI; nothing is quadratic in anything.
+  * (tiny next to the store — identity links, not data). One bounded
+  * fetch ([[graft.Regime]]) decides where: a link set of at most
+  * [[graft.Regime.budget]] rows clusters by union-find on the driver
+  * (at sf0.1 the 30,000 benchmark links do), a larger one by GraphX
+  * CC. Either way the (uri → canon) map is one narrow
+  * relation, and the rewrite stays in Spark: two key-equi left joins
+  * against the store (subject, then IRI objects) plus one set-dedup
+  * of the merged result. All shuffles are keyed by URI; nothing is
+  * quadratic in anything.
   */
 object SameAs {
 
@@ -26,10 +32,28 @@ object SameAs {
   /** (uri, canon) for every URI that appears in a sameAs link; canon
     * is the component's minimum URI (deterministic on any cluster,
     * like [[Analytics.connectedComponents]]'s naming). Transitive and
-    * symmetric by construction: GraphX CC ignores edge direction, so
-    * `a sameAs b . b sameAs c` lands all three on one canon.
+    * symmetric by construction: components ignore edge direction, so
+    * `a sameAs b . b sameAs c` lands all three on one canon. Links
+    * that fit the regime gate ([[graft.Regime]]) cluster by union-find
+    * on the driver and come back as a local relation; more links run
+    * GraphX CC and come back checkpointed.
     */
-  def canonicalMap(spark: SparkSession, sameAs: DataFrame): DataFrame = {
+  def canonicalMap(spark: SparkSession, sameAs: DataFrame): DataFrame =
+    canonicalMap(spark, sameAs, Regime.budget)
+
+  private[graft] def canonicalMap(spark: SparkSession, sameAs: DataFrame,
+                                  budget: Long): DataFrame =
+    Regime.fetchIfSmall(sameAs.select(col("s"), col("o")), budget) match {
+      case Right(rows) =>
+        val uri = sameAs.select(col("s").as("uri"))
+          .unionAll(sameAs.select(col("o").as("uri"))).schema.head
+        Regime.localRelation(sameAs,
+          StructType(Seq(uri, StructField("canon", uri.dataType, nullable = true))),
+          new LocalGraph(rows, uri.dataType).canonicalMap)
+      case Left(kept) => Checkpoints.tracked(sparkCanonicalMap(spark, kept))
+    }
+
+  private def sparkCanonicalMap(spark: SparkSession, sameAs: DataFrame): DataFrame = {
     val verts = sameAs.select(col("s").as("uri"))
       .unionAll(sameAs.select(col("o").as("uri")))
       .distinct()
@@ -72,8 +96,8 @@ object SameAs {
     // identity links must join two RESOURCES; a malformed sameAs with
     // a literal object is dropped with the rest of the sameAs slice
     // but never seeds a cluster
-    val m = graft.Checkpoints.tracked(canonicalMap(spark,
-      store.filter(col("p") === OWL_SAMEAS && col("o_is_iri"))))
+    val m = canonicalMap(spark,
+      store.filter(col("p") === OWL_SAMEAS && col("o_is_iri")))
     val base = store.filter(col("p") =!= OWL_SAMEAS)
     val ms = m.select(col("uri").as("s"), col("canon").as("__s_canon"))
     val mo = m.select(col("uri").as("__o_uri"), col("canon").as("__o_canon"))

@@ -37,8 +37,10 @@ object TripleStats {
     * whole in one JVM: the SPARQL compiler broadcast-hints a pattern
     * scan estimated at or under it (its join never shuffles the big
     * side; AQE still upgrades larger sides at runtime when their
-    * measured size allows), and a seeded [[graft.inference.Closure]]
-    * walks an edge relation of at most this many rows on the driver.
+    * measured size allows), and [[graft.Regime]], the one gate between
+    * the driver and the cluster, answers a graph operator or a seeded
+    * closure from the rows of an input of at most this many rows on
+    * the driver.
     * Sized so such a relation (2-4 short string columns) stays well
     * under a 10 MB broadcast budget.
     */

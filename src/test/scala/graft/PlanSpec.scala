@@ -748,7 +748,11 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("graph_resource_alloc: weighted wedges partial-agg; top-k heaps") {
-    val p = plan("graph_resource_alloc")
+    // the key's Spark side (budget 0): at sf0.001 its edges fit the
+    // regime gate, and the driver side has no plan to guard
+    val p = graft.graphx.Analytics.resourceAllocation(
+      graft.graphx.GraphQueries.coOrderPartEdgeKeys(spark, dir), 20, 10000000L, 0)
+      .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"))
     assert(p.contains("partial_sum"),
       "the 1/deg contributions must combine map-side")

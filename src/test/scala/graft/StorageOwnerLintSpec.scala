@@ -40,6 +40,15 @@ class StorageOwnerLintSpec extends AnyFunSuite {
       fail("storage calls outside graft.Checkpoints:\n" + found.mkString("\n"))
   }
 
+  test("only TripleStats, Regime and the compiler's two broadcast hints read smallRows") {
+    // operators size their inputs through the one gate, graft.Regime
+    val found = hits("src/main/scala",
+      Set("graft/rdf/TripleStats.scala", "graft/Regime.scala"), Seq("smallRows"))
+    val (hints, others) = found.partition(_.startsWith("src/main/scala/graft/sparql/Compiler.scala:"))
+    if (others.nonEmpty || hints.size != 2)
+      fail("smallRows read outside graft.Regime:\n" + found.mkString("\n"))
+  }
+
   test("only Harness builds a SparkSession") {
     // split so this file does not match itself
     val builder = "SparkSession" + ".builder"

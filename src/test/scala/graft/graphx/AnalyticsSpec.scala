@@ -68,16 +68,19 @@ class AnalyticsSpec extends AnyFunSuite {
     // triangle a-b-c with pendant tail c-d
     val tri = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"))
       .toDF("src", "dst")
-    def core(k: Int, rounds: Int) =
-      Analytics.kCore(tri, k, rounds).as[String].collect().toSet
-    assert(core(2, 3) == Set("a", "b", "c")) // pendant d peels, triangle stays
-    assert(core(3, 3).isEmpty)               // no 3-core in a triangle
-    // chain: the peel cascades one layer per round
     val chain = Seq(("a", "b"), ("b", "c"), ("c", "d")).toDF("src", "dst")
-    def chainCore(rounds: Int) =
-      Analytics.kCore(chain, 2, rounds).as[String].collect().toSet
-    assert(chainCore(1) == Set("b", "c")) // ends gone after one round
-    assert(chainCore(2).isEmpty)          // the rest follows next round
+    // both sides of the regime gate: the driver peel, then Spark's
+    for (budget <- Seq(graft.rdf.TripleStats.smallRows, 0L)) {
+      def core(k: Int, rounds: Int) =
+        Analytics.kCore(tri, k, rounds, budget).as[String].collect().toSet
+      assert(core(2, 3) == Set("a", "b", "c")) // pendant d peels, triangle stays
+      assert(core(3, 3).isEmpty)               // no 3-core in a triangle
+      // chain: the peel cascades one layer per round
+      def chainCore(rounds: Int) =
+        Analytics.kCore(chain, 2, rounds, budget).as[String].collect().toSet
+      assert(chainCore(1) == Set("b", "c")) // ends gone after one round
+      assert(chainCore(2).isEmpty)          // the rest follows next round
+    }
   }
 
   test("k-core converges to the fixpoint where a fixed bound under-peels") {
@@ -85,11 +88,13 @@ class AnalyticsSpec extends AnyFunSuite {
     // so 4 rounds (the old fixed bound) leave a non-empty superset
     // while the true 2-core is empty
     val path = (1 to 11).map(i => (f"v$i%02d", f"v${i + 1}%02d")).toDF("src", "dst")
-    val bounded = Analytics.kCore(path, 2, maxRounds = 4).as[String].collect()
-    assert(bounded.nonEmpty) // the bound demonstrably under-peels
-    val full = Analytics.kCore(path, 2).as[String].collect()
-    assert(full.isEmpty)
-    assert(Analytics.lastKCoreRounds > 4)
+    for (budget <- Seq(graft.rdf.TripleStats.smallRows, 0L)) {
+      val bounded = Analytics.kCore(path, 2, maxRounds = 4, budget).as[String].collect()
+      assert(bounded.nonEmpty) // the bound demonstrably under-peels
+      val full = Analytics.kCore(path, 2, 10000, budget).as[String].collect()
+      assert(full.isEmpty)
+      assert(Analytics.lastKCoreRounds > 4)
+    }
   }
 
   test("label propagation separates disconnected communities deterministically") {
@@ -244,11 +249,55 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(q0 == ((6L, 1L, 0.0)))
   }
 
+  test("graph operators: the driver and Spark regimes give identical rows") {
+    import org.apache.spark.sql.DataFrame
+    // budget 0 forces the Spark side (every graph has an edge); the
+    // shared budget runs the driver side
+    val budget = graft.rdf.TripleStats.smallRows
+    val graphs = Seq(
+      Seq(("1", "2"), ("2", "3"), ("3", "4"), ("4", "5")),                // chain
+      Seq(("1", "2"), ("2", "3"), ("3", "1"), ("3", "4")),                // cycle
+      Seq(("1", "1"), ("1", "2"), ("2", "3"), ("3", "1")),                // self-loop
+      (1 to 6).map(v => ("0", v.toString)) :+ (("1", "2")),               // star
+      Seq(("9", "10"), ("10", "11"), ("9", "11"), ("20", "21"), ("21", "22"),
+        ("20", "22"), ("22", "23")),                                      // two components
+      Seq(("1", "2"), ("1", "2"), ("2", "3"), ("3", "1"), ("2", "1")),    // duplicated edges
+      Seq(("1", "2"), ("2", null), (null, "3"), ("3", "1"), ("2", "3"),
+        (null, null)))                                                    // null endpoints
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def same(g: Any, driver: DataFrame, inSpark: DataFrame): Unit = {
+      assert(driver.isLocal && !inSpark.isLocal, g)
+      assert(rows(driver) == rows(inSpark), g)
+      assert(driver.schema == inSpark.schema, g)
+    }
+    for (g <- graphs) {
+      val e = g.toDF("src", "dst")
+      same(g, Analytics.pageRank(spark, e, 3, 1000000000L, budget),
+        Analytics.pageRank(spark, e, 3, 1000000000L, 0))
+      same(g, Analytics.connectedComponents(spark, e, budget),
+        Analytics.connectedComponents(spark, e, 0))
+      for (k <- Seq(2, 3)) {
+        val driver = Analytics.kCore(e, k, 10000, budget)
+        val driverRounds = Analytics.lastKCoreRounds
+        same(g, driver, Analytics.kCore(e, k, 10000, 0))
+        assert(driverRounds == Analytics.lastKCoreRounds, g)
+      }
+      // the wedge family on numeric ids, as the benchmark runs it
+      val ids = g.map { case (a, b) => (Option(a).map(_.toLong), Option(b).map(_.toLong)) }
+        .toDF("src", "dst")
+      for (wedgeBudget <- Seq(10000000L, 2L))
+        same(g, Analytics.resourceAllocation(ids, 50, wedgeBudget, budget),
+          Analytics.resourceAllocation(ids, 50, wedgeBudget, 0))
+      graft.Checkpoints.releaseCaches()
+    }
+  }
+
   test("releaseCaches unpersists every RDD a graph query cached") {
     graft.Checkpoints.releaseCaches() // drop whatever earlier tests left
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    Analytics.connectedComponents(spark, edges).collect()
-    Analytics.pageRank(spark, edges, 3).collect()
+    // budget 0: both run their GraphX/Spark side, which caches
+    Analytics.connectedComponents(spark, edges, 0).collect()
+    Analytics.pageRank(spark, edges, 3, 1000000000L, 0).collect()
     // the one release also covers the dedup persists and the reasoner's
     // closure checkpoints
     val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),

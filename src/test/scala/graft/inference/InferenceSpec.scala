@@ -215,6 +215,30 @@ class InferenceSpec extends AnyFunSuite {
       ("c:2", ":locatedIn", "n:2")))
   }
 
+  test("sameAs canonicalMap: the driver and Spark regimes give identical rows") {
+    // budget 0 forces GraphX CC; the shared budget runs union-find on
+    // the driver
+    val budget = graft.rdf.TripleStats.smallRows
+    val graphs = Seq(
+      Seq(("e:1", "e:2"), ("e:2", "e:3"), ("e:3", "e:4")),              // chain
+      Seq(("e:1", "e:2"), ("e:2", "e:3"), ("e:3", "e:1")),              // cycle
+      Seq(("e:1", "e:1"), ("e:1", "e:2")),                              // self-loop
+      (1 to 6).map(v => ("e:0", s"e:$v")),                              // star
+      Seq(("e:9", "e:10"), ("e:20", "e:21"), ("e:21", "e:11")),         // two components
+      Seq(("e:2", "e:1"), ("e:2", "e:1"), ("e:1", "e:2")),              // duplicated links
+      Seq(("e:1", "e:2"), ("e:3", null), (null, "e:4"), (null, null)))  // null endpoints
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (g <- graphs) {
+      val links = g.toDF("s", "o")
+      val driver = SameAs.canonicalMap(spark, links, budget)
+      val inSpark = SameAs.canonicalMap(spark, links, 0)
+      assert(driver.isLocal && !inSpark.isLocal, g)
+      assert(rows(driver) == rows(inSpark), g)
+      assert(driver.schema == inSpark.schema, g)
+    }
+    graft.Checkpoints.releaseCaches()
+  }
+
   test("sameAs canonicalization smushes chains, spares literal lookalikes") {
     val store = Seq(
       // one entity under three URIs, linked by a CHAIN (a→b, b→c):
