@@ -6,7 +6,9 @@ import org.apache.spark.storage.StorageLevel
 
 /** The one owner of intermediate storage: every localCheckpoint,
   * persist and cached graph the library makes is registered here, and
-  * [[releaseCaches]] is the one release.
+  * [[releaseCaches]] is the one release. The one earlier release is a
+  * fixpoint loop's superseded generation, which [[Generation.advance]]
+  * drops; no caller holds an RDD handle.
   *
   * Caller contract: release once the returned DataFrames are consumed,
   * never mid-flight. The registry is process-global, so a release
@@ -49,13 +51,11 @@ object Checkpoints {
     */
   def tracked(df: DataFrame): DataFrame = trackedWithHandle(df)._1
 
-  /** [[tracked]], also returning the backing RDD — iterative loops
-    * (pagerank, k-core, LPA) unpersist each superseded generation
-    * directly so peak storage stays at one generation; the registry
-    * still drains whatever remains at release time (double-unpersist
-    * is a no-op).
+  /** [[tracked]], also returning the backing RDD: for [[Generation]],
+    * which releases each superseded generation itself (the registry's
+    * unpersist at release time is then a no-op).
     */
-  def trackedWithHandle(df: DataFrame): (DataFrame, RDD[_]) = {
+  private def trackedWithHandle(df: DataFrame): (DataFrame, RDD[_]) = {
     val out = df.localCheckpoint()
     val rdd = out.queryExecution.analyzed.collectLeaves().collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
@@ -65,6 +65,41 @@ object Checkpoints {
     track[RDD[_]](rdd)(_.unpersist(_))
     (out, rdd)
   }
+
+  /** One loop variable's checkpoint generations (a peel's edge set, a
+    * rank table, a BFS frontier), so no loop holds an RDD handle or
+    * calls unpersist. [[advance]] checkpoints `next` as [[tracked]]
+    * does, and only then releases the generation `next` replaces,
+    * which `next` may therefore read. A variable holds one generation
+    * however many rounds run; the last is left to [[releaseCaches]].
+    * A `df` is not read after the next [[advance]]: its blocks are gone.
+    */
+  final class Generation private[Checkpoints] (private var current: DataFrame) {
+    private var handle: RDD[_] = null
+
+    def df: DataFrame = current
+
+    /** Checkpoint `next`, release the generation it replaces, and
+      * return the new [[df]].
+      */
+    def advance(next: DataFrame): DataFrame = {
+      val (out, rdd) = trackedWithHandle(next)
+      if (handle != null) handle.unpersist(blocking = false)
+      current = out; handle = rdd
+      out
+    }
+  }
+
+  /** A [[Generation]] whose first generation is `first`, checkpointed. */
+  def generation(first: DataFrame): Generation = {
+    val g = seeded(); g.advance(first); g
+  }
+
+  /** A [[Generation]] starting at `seed` as it is, never checkpointed
+    * or released here: a literal start (PageRank's seed rank), or null
+    * for a variable first set inside the loop.
+    */
+  def seeded(seed: DataFrame = null): Generation = new Generation(seed)
 
   /** Drain the registry, then sweep the context for remaining
     * GraphX-typed RDDs: GraphX algorithms cache intermediate

@@ -31,13 +31,28 @@ object Analytics {
     */
   def releaseCaches(): Unit = Checkpoints.releaseCaches()
 
-  /** (vertices(id,uri), edges RDD) from a (src,dst) DataFrame.
-    *
-    * Pregel iterations pay a fixed per-partition cost per superstep,
-    * so partition count tracks graph size (1 partition per ~500k
-    * edges) instead of inheriting the SQL shuffle setting — on a
+  /** GraphX partitions for a graph of `edges`: one per ~500k edges,
+    * at least 4, at most the session's parallelism. Pregel iterations
+    * pay a fixed per-partition cost per superstep, so the count tracks
+    * graph size instead of inheriting the SQL shuffle setting — on a
     * 1000-executor run the edge count drives this into the thousands,
-    * on a laptop-sized graph it stays small.
+    * on a laptop-sized graph it stays small. One count of `edges`,
+    * which callers persist first.
+    */
+  private def graphPartitions(edges: org.apache.spark.rdd.RDD[_]): Int =
+    math.max(4, math.min(edges.sparkContext.defaultParallelism,
+      (edges.count() / 500000L).toInt + 1))
+
+  /** `edges` coalesced to [[graphPartitions]] when it has more; never
+    * grown.
+    */
+  private def coalescedForGraph[T](edges: org.apache.spark.rdd.RDD[T]) = {
+    val nParts = graphPartitions(edges)
+    if (nParts < edges.getNumPartitions) edges.coalesce(nParts) else edges
+  }
+
+  /** (vertices(id,uri), edges RDD) from a (src,dst) DataFrame, both
+    * resized to [[graphPartitions]] (grown as well as shrunk).
     */
   private def build(spark: SparkSession, edges: DataFrame,
                     undirected: Boolean = false): (DataFrame, Graph[String, Int]) = {
@@ -52,9 +67,7 @@ object Analytics {
     // (not coalesce) when growing, since coalesce can only shrink
     val edgeRdd0 = Checkpoints.persisted(
       e.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1)))
-    val nParts = math.max(4, math.min(
-      spark.sparkContext.defaultParallelism,
-      (edgeRdd0.count() / 500000L).toInt + 1))
+    val nParts = graphPartitions(edgeRdd0)
     def resize[T: scala.reflect.ClassTag](r: org.apache.spark.rdd.RDD[T]) =
       if (nParts < r.getNumPartitions) r.coalesce(nParts)
       else if (nParts > r.getNumPartitions) r.repartition(nParts)
@@ -127,21 +140,15 @@ object Analytics {
     val edgeRdd0 = Checkpoints.persisted(edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1)))
-    // size partitions to the graph like [[build]] does (1 per ~500k
-    // edges, floor 4): the input frame often inherits a WIDE upstream
-    // layout (a filtered slice of the spread cached store arrives with
-    // cores×legs partitions), and Pregel pays a fixed per-partition
-    // cost per superstep — unsized, the sameAs CC measured 12× slower
-    // purely from tiny-task scheduling (r19). The sameAs caller only
-    // comes here over the regime gate's budget; a smaller link set
-    // clusters on the driver ([[LocalGraph.canonicalMap]])
-    val nParts = math.max(4, math.min(
-      spark.sparkContext.defaultParallelism,
-      (edgeRdd0.count() / 500000L).toInt + 1))
-    val edgeRdd =
-      if (nParts < edgeRdd0.getNumPartitions) edgeRdd0.coalesce(nParts)
-      else edgeRdd0
-    val g = Checkpoints.track(Graph.fromEdges(edgeRdd, 0))(_.unpersist(_))
+    // size partitions to the graph ([[graphPartitions]]): the input
+    // frame often inherits a WIDE upstream layout (a filtered slice of
+    // the spread cached store arrives with cores×legs partitions), and
+    // Pregel pays a fixed per-partition cost per superstep — unsized,
+    // the sameAs CC measured 12× slower purely from tiny-task
+    // scheduling (r19). The sameAs caller only comes here over the
+    // regime gate's budget; a smaller link set clusters on the driver
+    // ([[LocalGraph.canonicalMap]])
+    val g = Checkpoints.track(Graph.fromEdges(coalescedForGraph(edgeRdd0), 0))(_.unpersist(_))
     val cc = Checkpoints.track(g.connectedComponents())(_.unpersist(_))
     spark.createDataFrame(cc.vertices).toDF("id", "comp")
   }
@@ -195,29 +202,26 @@ object Analytics {
     // round — the peel loop's edge relation never re-shuffles.
     // Explicit count (REPARTITION_BY_NUM) so AQE can't coalesce the
     // partitioning out of alignment with later rounds.
-    var (cur, curRdd) = Checkpoints.trackedWithHandle(edges.select(col("src"), col("dst"))
+    val cur = Checkpoints.generation(edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
         col("src")))
-    var prev = cur.count()
+    var prev = cur.df.count()
     var rounds = 0
     var converged = prev == 0L
     while (!converged && rounds < maxRounds) {
-      val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val keep = cur.df.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src"))
-      val (next, nextRdd) = Checkpoints.trackedWithHandle(cur
+      val n = cur.advance(cur.df
         .join(keep, Seq("src"), "left_semi")
         .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")))
-      val n = next.count()
+        .select(col("src"), col("dst"))).count()
       rounds += 1
       converged = n == prev
       prev = n
-      curRdd.unpersist(blocking = false)
-      cur = next; curRdd = nextRdd
     }
     lastKCoreRounds = rounds
-    cur.select(col("src").as("uri")).distinct()
+    cur.df.select(col("src").as("uri")).distinct()
   }
 
   /** Strongly connected components over NUMERIC-id directed edges
@@ -262,85 +266,65 @@ object Analytics {
     */
   def stronglyConnectedComponents(edges: DataFrame): DataFrame = {
     val typed = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    var (rem, remRdd) = Checkpoints.trackedWithHandle(typed
+    val rem = Checkpoints.generation(typed
       .filter(col("src") =!= col("dst")).distinct())
     // vertex set from the UNFILTERED edges: a vertex whose only edges
     // are self-loops still owns a singleton SCC
-    var (verts, vertsRdd) = Checkpoints.trackedWithHandle(typed.select(col("src").as("v"))
+    val verts = Checkpoints.generation(typed.select(col("src").as("v"))
       .unionAll(typed.select(col("dst").as("v"))).distinct())
-    var nVerts = verts.count()
+    // the per-round variables live across peel rounds, so each holds
+    // one generation however many rounds run
+    val c = Checkpoints.seeded()
+    val reached = Checkpoints.seeded()
+    val step = Checkpoints.seeded()
+    var nVerts = verts.df.count()
     val pieces = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def colorSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("color").cast("decimal(38,0)"))).head
         .getDecimal(0)
     while (nVerts > 0) {
       // (1) forward max flood: color(v) = max id reaching v
-      var (c, cRdd) = Checkpoints.trackedWithHandle(
-        verts.select(col("v"), col("v").as("color")))
-      var csum = colorSum(c)
+      var csum = colorSum(c.advance(verts.df.select(col("v"), col("v").as("color"))))
       var flooded = false
       while (!flooded) {
-        val msgs = rem
-          .join(c.select(col("v").as("src"), col("color")), Seq("src"))
+        val msgs = rem.df
+          .join(c.df.select(col("v").as("src"), col("color")), Seq("src"))
           .groupBy(col("dst")).agg(max(col("color")).as("mc"))
-        val (next, nextRdd) = Checkpoints.trackedWithHandle(c
+        val s2 = colorSum(c.advance(c.df
           .join(msgs.select(col("dst").as("v"), col("mc")), Seq("v"), "left_outer")
           .select(col("v"), greatest(col("color"), coalesce(col("mc"), col("color")))
-            .as("color")))
-        val s2 = colorSum(next)
-        cRdd.unpersist(blocking = false)
-        c = next; cRdd = nextRdd
+            .as("color"))))
         flooded = s2.compareTo(csum) == 0; csum = s2
       }
       // (2) reverse frontier walk from roots within each color class
-      var (reached, reachedRdd) = Checkpoints.trackedWithHandle(
-        c.filter(col("v") === col("color")))
-      var frontier = reached
-      var frontierRdd = reachedRdd
+      var frontier = reached.advance(c.df.filter(col("v") === col("color")))
       var walked = false
       while (!walked) {
-        val (step, stepRdd) = Checkpoints.trackedWithHandle(rem
+        frontier = step.advance(rem.df
           .join(frontier.select(col("v").as("dst"), col("color")), Seq("dst"))
           .select(col("src").as("v"), col("color"))
-          .join(c.withColumnRenamed("color", "vc"), Seq("v"))
+          .join(c.df.withColumnRenamed("color", "vc"), Seq("v"))
           .filter(col("color") === col("vc"))
           .select(col("v"), col("color"))
           .distinct()
-          .join(reached, Seq("v"), "left_anti"))
-        if (frontierRdd ne reachedRdd) frontierRdd.unpersist(blocking = false)
-        walked = step.isEmpty
-        if (walked) {
-          stepRdd.unpersist(blocking = false)
-          frontier = reached; frontierRdd = reachedRdd
-        } else {
-          val (next, nextRdd) = Checkpoints.trackedWithHandle(reached.unionAll(step))
-          reachedRdd.unpersist(blocking = false)
-          reached = next; reachedRdd = nextRdd
-          frontier = step; frontierRdd = stepRdd
-        }
+          .join(reached.df, Seq("v"), "left_anti"))
+        walked = frontier.isEmpty
+        if (!walked) reached.advance(reached.df.unionAll(frontier))
       }
-      // (3) label removed SCCs by min member and peel them off
-      val (piece, _) = Checkpoints.trackedWithHandle(reached
-        .join(reached.groupBy(col("color")).agg(min(col("v")).as("comp")),
+      // (3) label removed SCCs by min member and peel them off; the
+      // pieces are results, held to the end
+      val sccs = reached.df
+      pieces += Checkpoints.tracked(sccs
+        .join(sccs.groupBy(col("color")).agg(min(col("v")).as("comp")),
           Seq("color"))
         .select(col("v"), col("comp")))
-      pieces += piece
-      val (nextVerts, nvRdd) = Checkpoints.trackedWithHandle(
-        verts.join(reached, Seq("v"), "left_anti"))
-      val (nextRem, nrRdd) = Checkpoints.trackedWithHandle(rem
-        .join(reached.select(col("v").as("src")), Seq("src"), "left_anti")
-        .join(reached.select(col("v").as("dst")), Seq("dst"), "left_anti")
+      verts.advance(verts.df.join(sccs, Seq("v"), "left_anti"))
+      rem.advance(rem.df
+        .join(sccs.select(col("v").as("src")), Seq("src"), "left_anti")
+        .join(sccs.select(col("v").as("dst")), Seq("dst"), "left_anti")
         .select(col("src"), col("dst")))
-      cRdd.unpersist(blocking = false)
-      reachedRdd.unpersist(blocking = false)
-      vertsRdd.unpersist(blocking = false)
-      remRdd.unpersist(blocking = false)
-      verts = nextVerts; vertsRdd = nvRdd
-      rem = nextRem; remRdd = nrRdd
-      nVerts = verts.count()
+      nVerts = verts.df.count()
     }
-    vertsRdd.unpersist(blocking = false)
-    remRdd.unpersist(blocking = false)
     pieces.reduceOption(_ unionAll _)
       .getOrElse(edges.sparkSession.emptyDataFrame
         .select(lit(0L).as("v"), lit(0L).as("comp")).limit(0))
@@ -356,13 +340,7 @@ object Analytics {
       .distinct()
     val canonRdd = Checkpoints.persisted(
       canon.rdd.map(r => (r.getLong(0), r.getLong(1))))
-    val nParts = math.max(4, math.min(
-      spark.sparkContext.defaultParallelism,
-      (canonRdd.count() / 500000L).toInt + 1))
-    val sized =
-      if (nParts < canonRdd.getNumPartitions) canonRdd.coalesce(nParts)
-      else canonRdd
-    val g = Checkpoints.track(Graph.fromEdgeTuples(sized, 1)
+    val g = Checkpoints.track(Graph.fromEdgeTuples(coalescedForGraph(canonRdd), 1)
       .partitionBy(PartitionStrategy.RandomVertexCut))(_.unpersist(_))
     val perVertex = Checkpoints.track(g.triangleCount())(_.unpersist(_))
       .vertices.map(_._2.toLong)
@@ -397,21 +375,18 @@ object Analytics {
       // per-round join's requirement
       .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
         col("dst")))
-    var (lab, labRdd) = Checkpoints.trackedWithHandle(
+    val lab = Checkpoints.generation(
       und.select(col("src").as("v")).distinct()
         .select(col("v"), col("v").as("label")))
     for (_ <- 1 to rounds) {
       val counts = und
-        .join(lab.select(col("v").as("dst"), col("label")), Seq("dst"))
+        .join(lab.df.select(col("v").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src"), col("label")).agg(count(lit(1)).as("n"))
-      val next = counts.groupBy(col("src"))
+      lab.advance(counts.groupBy(col("src"))
         .agg(max(struct(col("n"), (-col("label")).as("neg"))).as("best"))
-        .select(col("src").as("v"), (-col("best.neg")).as("label"))
-      val (n2, r2) = Checkpoints.trackedWithHandle(next)
-      labRdd.unpersist(blocking = false)
-      lab = n2; labRdd = r2
+        .select(col("src").as("v"), (-col("best.neg")).as("label")))
     }
-    lab
+    lab.df
   }
 
   /** Newman modularity of a vertex partition over a canonical
@@ -531,23 +506,20 @@ object Analytics {
       e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), Seq("src"))
       .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
         col("src")))
-    var rank = verts.select(col("uri"), lit(scale).as("rank"))
-    var rankRdd: org.apache.spark.rdd.RDD[_] = null
+    // the seed rank is a literal column: nothing to checkpoint
+    val rank = Checkpoints.seeded(verts.select(col("uri"), lit(scale).as("rank")))
     for (_ <- 1 to iters) {
       val msgs = withDeg
-        .join(rank.select(col("uri").as("src"), col("rank")), Seq("src"))
+        .join(rank.df.select(col("uri").as("src"), col("rank")), Seq("src"))
         .select(col("dst").as("uri"), expr("rank div outdeg").as("c"))
         .groupBy(col("uri")).agg(sum(col("c")).as("msum"))
-      val (next, nextRdd) = Checkpoints.trackedWithHandle(
-        verts.join(msgs, Seq("uri"), "left_outer")
-          .select(col("uri"),
-            (lit(scale * 15 / 100) +
-              expr("(coalesce(msum, 0L) div 100) * 85 " +
-                "+ ((coalesce(msum, 0L) % 100) * 85) div 100")).as("rank")))
-      if (rankRdd != null) rankRdd.unpersist(blocking = false)
-      rank = next; rankRdd = nextRdd
+      rank.advance(verts.join(msgs, Seq("uri"), "left_outer")
+        .select(col("uri"),
+          (lit(scale * 15 / 100) +
+            expr("(coalesce(msum, 0L) div 100) * 85 " +
+              "+ ((coalesce(msum, 0L) % 100) * 85) div 100")).as("rank")))
     }
-    rank
+    rank.df
   }
 
   /** Min hop count from any vertex of `sources` (undirected). The

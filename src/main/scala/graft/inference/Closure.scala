@@ -23,7 +23,9 @@ import graft.{Checkpoints, Regime}
   *  - a bound endpoint over more edges runs one frontier BFS in
   *    Spark, which touches only the seed's neighborhood.
   * Both Spark loops are driver-driven and cut the growing lineage
-  * with a tracked localCheckpoint ([[graft.Checkpoints]]).
+  * with one checkpoint per round, each loop variable a
+  * [[graft.Checkpoints.Generation]], so a loop holds one generation
+  * of each however many rounds it runs.
   *
   * The gate between the two seeded regimes is [[graft.Regime]], the
   * one gate the graph operators share: one action prices the
@@ -36,23 +38,21 @@ object Closure {
 
   /** Strict transitive closure of (sub, sup) edges. */
   def transitive(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
-    var cur = Checkpoints.tracked(edges.select(col("sub"), col("sup")).distinct())
-    var size = cur.count()
+    val cur = Checkpoints.generation(edges.select(col("sub"), col("sup")).distinct())
+    var size = cur.df.count()
     var round = 0
     var grown = true
     while (grown && round < maxRounds) {
-      val next = Checkpoints.tracked(cur.as("a")
-        .join(cur.as("b"), col("a.sup") === col("b.sub"))
+      val nextSize = cur.advance(cur.df.as("a")
+        .join(cur.df.as("b"), col("a.sup") === col("b.sub"))
         .select(col("a.sub").as("sub"), col("b.sup").as("sup"))
-        .union(cur)
-        .distinct())
-      val nextSize = next.count()
+        .union(cur.df)
+        .distinct()).count()
       grown = nextSize > size
-      cur = next
       size = nextSize
       round += 1
     }
-    cur
+    cur.df
   }
 
   /** Nodes reachable in one or more hops from a constant source. One
@@ -147,23 +147,21 @@ object Closure {
     * nodes, until none appear.
     */
   private def frontierBfs(edges: DataFrame, firstHop: DataFrame): DataFrame = {
-    var reached = Checkpoints.tracked(firstHop.select(col("sup")).distinct())
+    val reached = Checkpoints.generation(firstHop.select(col("sup")).distinct())
+    val step = Checkpoints.seeded()
     // the frontier column is renamed so the frontier-edges join never
     // carries the same attribute on both sides (localCheckpoint keeps
     // expression ids, so an unrenamed frontier is a self-join that
     // trips Spark's ambiguity detection)
-    var frontier = reached.toDF("f_sup")
-    var done = reached.isEmpty
+    var frontier = reached.df
+    var done = frontier.isEmpty
     while (!done) {
-      val next = Checkpoints.tracked(frontier.join(edges, col("f_sup") === col("sub"))
+      frontier = step.advance(frontier.toDF("f_sup").join(edges, col("f_sup") === col("sub"))
         .select(col("sup")).distinct()
-        .except(reached))
-      done = next.isEmpty
-      if (!done) {
-        reached = Checkpoints.tracked(reached.union(next).distinct())
-        frontier = next.toDF("f_sup")
-      }
+        .except(reached.df))
+      done = frontier.isEmpty
+      if (!done) reached.advance(reached.df.union(frontier).distinct())
     }
-    reached
+    reached.df
   }
 }

@@ -952,9 +952,9 @@ object Similarity {
     * fold (zip_with + aggregate, no join); the argmax groupBy
     * map-side-combines to ONE row per vector; the update is one
     * keyed (cluster, dim) fold — two narrow shuffles per round, no
-    * driver-side centroid math, each generation a tracked
-    * localCheckpoint with the superseded one released (the
-    * kcore/LPA/bpeTrain loop idiom). Output: one row per surviving
+    * driver-side centroid math, centroids and assignments each a
+    * [[graft.Checkpoints.Generation]] (one checkpoint per round, the
+    * superseded one released). Output: one row per surviving
     * cluster (cluster, n_members, l1_e6 — the exact integer L1 norm
     * of the trained centroid, the engine-identical witness).
     */
@@ -980,18 +980,17 @@ object Similarity {
         transform(col("pm"), s => s.getField("me6")).as("ce6"))
       .withColumn("nc", dotL(col("ce6"), col("ce6")))
       .filter(col("nc") > 0)
-    var (cent, handle) = graft.Checkpoints.trackedWithHandle(assemble(
+    val cent = graft.Checkpoints.generation(assemble(
       ev.groupBy(col("label").as("c"), col("pos"))
         .agg(sum(col("xe6")).as("s"), count(lit(1)).as("n"))
         .select(col("c"), col("pos"), expr(floorDivSql).as("me6"))))
-    var assign: DataFrame = null
-    var aHandle: org.apache.spark.rdd.RDD[_] = null
+    val assign = graft.Checkpoints.seeded()
     for (_ <- 1 to rounds) {
       // the assignment checkpoints too: the round's scoring reads the
-      // PREVIOUS centroid generation, which the end of this iteration
+      // PREVIOUS centroid generation, which the centroid advance below
       // releases — a lazy assignment would reference freed blocks
-      val (a, ah) = graft.Checkpoints.trackedWithHandle(
-        ve.crossJoin(broadcast(cent))
+      assign.advance(
+        ve.crossJoin(broadcast(cent.df))
           .withColumn("dot", dotL(col("ve6"), col("ce6")))
           .withColumn("q", expr(
             "(cast(dot as decimal(38,0)) * dot) div nc"))
@@ -1000,20 +999,14 @@ object Similarity {
           .groupBy(col("vec_id"))
           .agg(max(struct(col("key"), (-col("c")).as("negc"))).as("b"))
           .select(col("vec_id"), (-col("b.negc")).as("c")))
-      if (aHandle != null) aHandle.unpersist(false)
-      assign = a
-      aHandle = ah
-      val (next, h2) = graft.Checkpoints.trackedWithHandle(assemble(
-        ev.join(assign, "vec_id")
+      cent.advance(assemble(
+        ev.join(assign.df, "vec_id")
           .groupBy(col("c"), col("pos"))
           .agg(sum(col("xe6")).as("s"), count(lit(1)).as("n"))
           .select(col("c"), col("pos"), expr(floorDivSql).as("me6"))))
-      handle.unpersist(false)
-      cent = next
-      handle = h2
     }
-    assign.groupBy(col("c")).agg(count(lit(1)).as("n_members"))
-      .join(cent.select(col("c"),
+    assign.df.groupBy(col("c")).agg(count(lit(1)).as("n_members"))
+      .join(cent.df.select(col("c"),
         aggregate(col("ce6"), lit(0L), (acc, v) => acc + abs(v)).as("l1_e6")),
         Seq("c"))
       .select(col("c").cast("long").as("cluster"),

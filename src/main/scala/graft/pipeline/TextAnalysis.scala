@@ -884,10 +884,9 @@ object TextAnalysis {
     * ties, identical to the oracle's ORDER BY) + one narrow per-row
     * greedy merge fold ([[bpeMergeApply]] — the classic scan's
     * left-to-right non-overlapping semantics; a literal string
-    * replace is NOT equivalent, see there). Each vocab generation
-    * rides a tracked localCheckpoint with the superseded one
-    * unpersisted (the kcore/LPA loop idiom), so the plan stays
-    * round-sized.
+    * replace is NOT equivalent, see there). The vocab is a
+    * [[graft.Checkpoints.Generation]]: one checkpoint per round, the
+    * superseded one released, so the plan stays round-sized.
     *
     * Scale shape: the only corpus-scale work is the ONE initial
     * word-count fold; every round after runs on the word-type table
@@ -948,12 +947,12 @@ object TextAnalysis {
       .select(concat(lit(" "),
         concat_ws(" ", array_remove(split(col("w"), ""), "")),
         lit(" </w> ")).as("seq"), col("freq"))
-    var (words, handle) = graft.Checkpoints.trackedWithHandle(words0)
+    val words = graft.Checkpoints.generation(words0)
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     var r = 1
     var exhausted = false
     while (r <= rounds && !exhausted) {
-      val top = bpeSymbolPairs(words)
+      val top = bpeSymbolPairs(words.df)
         .orderBy(col("n").desc, col("tok_l"), col("tok_r"))
         .limit(1).collect()
       if (top.isEmpty) exhausted = true // no adjacent pairs left
@@ -964,18 +963,13 @@ object TextAnalysis {
         // the last round's post-merge vocab is only needed when the
         // caller encodes with it (bpeEncode); bpeTrain wants the
         // merge list alone, so skip the final vocabulary-scale build
-        if (r < rounds || needFinalVocab) {
-          val (next, h2) = graft.Checkpoints.trackedWithHandle(
-            words.select(bpeMergeApply(col("seq"), l, rt).as("seq"),
-              col("freq")))
-          handle.unpersist(false)
-          words = next
-          handle = h2
-        }
+        if (r < rounds || needFinalVocab)
+          words.advance(words.df.select(bpeMergeApply(col("seq"), l, rt).as("seq"),
+            col("freq")))
         r += 1
       }
     }
-    (merges.result(), words)
+    (merges.result(), words.df)
   }
 
   /** The trained BPE merge table: (round, tok_l, tok_r, n) — one row

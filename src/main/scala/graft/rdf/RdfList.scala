@@ -23,7 +23,11 @@ import graft.Checkpoints
   */
 object RdfList {
 
-  /** (head, pos, item) for every well-formed list in the relation. */
+  /** (head, pos, item) for every well-formed list in the relation.
+    * A chain still unfinished after `maxLen` cells — an `rdf:rest`
+    * cycle, or a list longer than `maxLen` — fails with an
+    * IllegalArgumentException naming its head.
+    */
   def unroll(triples: DataFrame, maxLen: Int = 1000): DataFrame = {
     val first = triples.filter(col("p") === "rdf:first")
       .select(col("s").as("cell"), col("o").as("item"))
@@ -32,25 +36,26 @@ object RdfList {
     val heads = first.select(col("cell"))
       .join(rest.select(col("nxt").as("cell")), Seq("cell"), "left_anti")
 
-    var frontier = Checkpoints.tracked(heads
+    val frontier = Checkpoints.generation(heads
       .select(col("cell").as("head"), col("cell"), lit(0).as("pos")))
-    var out = Checkpoints.tracked(frontier.join(first, "cell")
+    val out = Checkpoints.generation(frontier.df.join(first, "cell")
       .select(col("head"), col("pos"), col("item")))
     var round = 0
-    var done = frontier.isEmpty
+    var done = frontier.df.isEmpty
     while (!done && round < maxLen) {
-      val nextF = Checkpoints.tracked(frontier.join(rest, "cell")
+      val next = frontier.advance(frontier.df.join(rest, "cell")
         .filter(col("nxt") =!= "rdf:nil")
         .select(col("head"), col("nxt").as("cell"),
           (col("pos") + 1).as("pos")))
-      done = nextF.isEmpty
-      if (!done) {
-        out = Checkpoints.tracked(out.unionByName(nextF.join(first, "cell")
+      done = next.isEmpty
+      if (!done)
+        out.advance(out.df.unionByName(next.join(first, "cell")
           .select(col("head"), col("pos"), col("item"))))
-        frontier = nextF
-      }
       round += 1
     }
-    out
+    require(done, "rdf list from head " + frontier.df.select(col("head")).distinct()
+      .orderBy(col("head")).limit(3).collect().map(_.get(0)).mkString(", ") +
+      s" does not reach rdf:nil within maxLen = $maxLen cells: a cycle, or a longer list")
+    out.df
   }
 }

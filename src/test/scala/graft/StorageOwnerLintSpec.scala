@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * storage, so no other library source may call `.localCheckpoint(`,
   * `.persist(` or `.cache()` — those blocks would sit outside the one
   * release. TripleStore is the exception: it owns the session store
-  * cache. Likewise
+  * cache. A loop's superseded generations are released through
+  * [[Checkpoints.Generation]], never by the loop. Likewise
   * [[Harness]] is the one place a session is built.
   */
 class StorageOwnerLintSpec extends AnyFunSuite {
@@ -38,6 +39,17 @@ class StorageOwnerLintSpec extends AnyFunSuite {
       Seq(".localCheckpoint(", ".persist(", ".cache()"))
     if (found.nonEmpty)
       fail("storage calls outside graft.Checkpoints:\n" + found.mkString("\n"))
+  }
+
+  test("no fixpoint loop holds an RDD handle or unpersists") {
+    // loops advance a Checkpoints.Generation, which releases superseded
+    // generations; the other unpersists are the release lambdas handed
+    // to Checkpoints.track, the regime gate's and the store's
+    val found = hits("src/main/scala",
+      Set("graft/Checkpoints.scala", "graft/Regime.scala", "graft/rdf/TripleStore.scala"),
+      Seq(".unpersist(", "trackedWithHandle")).filterNot(_.contains("(_.unpersist(_))"))
+    if (found.nonEmpty)
+      fail("releases outside graft.Checkpoints:\n" + found.mkString("\n"))
   }
 
   test("only TripleStats, Regime and the compiler's two broadcast hints read smallRows") {

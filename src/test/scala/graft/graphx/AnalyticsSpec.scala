@@ -208,6 +208,31 @@ class AnalyticsSpec extends AnyFunSuite {
       (3L, 5L, 1000000000L / 3, 1L)))
   }
 
+  test("wedge operators: ids past the pack range give the packed rows, shifted") {
+    import org.apache.spark.sql.DataFrame
+    // ids of 2^32 and more fail the pack witness, so the wedge
+    // aggregation and anti-join run on the (u, v) columns instead
+    val shift = 1L << 32
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (1L, 3L), (4L, 5L))
+    val packed = e.toDF("src", "dst")
+    val unpacked = e.map { case (a, b) => (a + shift, b + shift) }.toDF("src", "dst")
+    def rows(df: DataFrame, off: Long) = df.collect().toSeq
+      .map(r => (0 until r.length).map(i => r.getLong(i) - (if (i < 2) off else 0L)))
+    def packs(df: DataFrame) = df.queryExecution.analyzed.toString.contains("shiftleft")
+    for ((name, op) <- Seq[(String, DataFrame => DataFrame)](
+      "commonNeighbors" -> (Analytics.commonNeighbors(_)),
+      // budget 0: the Spark side, where the two branches are
+      "resourceAllocation" -> (Analytics.resourceAllocation(_, 20, 10000000L, 0)),
+      "jaccardLinkPred" -> (Analytics.jaccardLinkPred(_)))) {
+      val (p, u) = (op(packed), op(unpacked))
+      assert(packs(p) && !packs(u), name)
+      val want = rows(p, 0L)
+      assert(want.nonEmpty, name)
+      assert(rows(u, shift) == want, name)
+    }
+    graft.Checkpoints.releaseCaches()
+  }
+
   test("katz centrality folds the walk recurrence exactly") {
     // path 1-2-3: deg (1,2,1); walks2 = sum of neighbor degs:
     // 1→2, 2→2, 3→2; walks3: 1→w2(2)=2, 2→w2(1)+w2(3)=4, 3→2.

@@ -79,6 +79,36 @@ class InferenceSpec extends AnyFunSuite {
     assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty)
   }
 
+  test("a Spark-side fixpoint loop holds the same storage however many rounds it runs") {
+    import org.apache.spark.sql.DataFrame
+    val sc = spark.sparkContext
+    // persistent RDDs a call leaves behind until releaseCaches
+    def held(op: => DataFrame): Int = {
+      graft.Checkpoints.releaseCaches(blocking = true)
+      val before = sc.getPersistentRDDs.size
+      op.collect()
+      val n = sc.getPersistentRDDs.size - before
+      graft.Checkpoints.releaseCaches(blocking = true)
+      n
+    }
+    def chain(n: Int) = (0 until n).map(i => (s"n$i", s"n${i + 1}")).toDF("sub", "sup")
+    def list(n: Int) = (0 until n).flatMap(i => Seq(
+      (s"c$i", "rdf:first", s"i$i"),
+      (s"c$i", "rdf:rest", if (i == n - 1) "rdf:nil" else s"c${i + 1}")))
+      .toDF("s", "p", "o")
+    // path doubling: 3 rounds against 7; the frontier BFS (budget 0
+    // forces the Spark side) and the list walk: one round per hop
+    for ((name, few, many) <- Seq[(String, () => DataFrame, () => DataFrame)](
+      ("transitive", () => Closure.transitive(chain(4)), () => Closure.transitive(chain(64))),
+      ("reachableFrom", () => Closure.reachableFrom(chain(4), "n0", 0),
+        () => Closure.reachableFrom(chain(64), "n0", 0)),
+      ("unroll", () => graft.rdf.RdfList.unroll(list(3)),
+        () => graft.rdf.RdfList.unroll(list(30))))) {
+      val (a, b) = (held(few()), held(many()))
+      assert(a > 0 && a == b, s"$name: $a persistent RDDs after the short run, $b after the long")
+    }
+  }
+
   test("driver closure equals Closure.transitive, and terminates on a cycle") {
     def sparkClosure(pairs: Seq[(String, String)]) =
       Closure.transitive(pairs.toDF("sub", "sup")).as[(String, String)].collect().toSet

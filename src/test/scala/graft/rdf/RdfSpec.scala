@@ -553,6 +553,25 @@ class RdfSpec extends AnyFunSuite {
       ("l2:0", 0, "x")))
   }
 
+  test("rdf list unroll fails on a lasso naming its head; a maxLen-item list unrolls") {
+    // c0 → c1 → c2 → c1: the chain never reaches rdf:nil
+    val lasso = Seq(
+      ("c0", "rdf:first", "a"), ("c0", "rdf:rest", "c1"),
+      ("c1", "rdf:first", "b"), ("c1", "rdf:rest", "c2"),
+      ("c2", "rdf:first", "c"), ("c2", "rdf:rest", "c1"))
+      .toDF("s", "p", "o")
+    val err = intercept[IllegalArgumentException](RdfList.unroll(lasso, maxLen = 8))
+    assert(err.getMessage.contains("head c0"), err.getMessage)
+    def list(n: Int) = (0 until n).flatMap(i => Seq(
+      (s"l:$i", "rdf:first", s"i$i"),
+      (s"l:$i", "rdf:rest", if (i == n - 1) "rdf:nil" else s"l:${i + 1}")))
+      .toDF("s", "p", "o")
+    assert(RdfList.unroll(list(8), maxLen = 8).as[(String, Int, String)].collect().toSet ==
+      (0 until 8).map(i => ("l:0", i, s"i$i")).toSet)
+    intercept[IllegalArgumentException](RdfList.unroll(list(9), maxLen = 8))
+    graft.Checkpoints.releaseCaches()
+  }
+
   test("canon digest is invariant under blank renaming; plain digest is not") {
     val g1 = Seq(("_:a", ":next", "_:b"), ("_:b", ":hasNation", "nat:1"))
       .toDF("s", "p", "o")
