@@ -16,7 +16,8 @@ import graft.rdf.TripleStore
 object Harness {
 
   /** The session of every main: `cpus` from SPARK_GRAFT_CPUS, else
-    * `defaultCpus`; UTC, UI off, log level WARN.
+    * `defaultCpus`; UTC, UI off, log level WARN, except the
+    * lineage-truncation warning (see [[local]]).
     */
   def session(defaultCpus: Int): SparkSession =
     local(sys.env.get("SPARK_GRAFT_CPUS").fold(defaultCpus)(_.toInt))
@@ -33,6 +34,12 @@ object Harness {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // releasing a checkpoint generation warns that the locally
+    // checkpointed RDD "cannot be recomputed after unpersisting", once
+    // per generation by design: 984 of the 1,044 lines of one sf0.1
+    // Soak log. The logger is the checkpointed RDD's class.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     spark
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -8,6 +9,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pushdown/pruning freedom; at cluster scale the same paths would be
   * table identifiers with partitioned layouts, nothing here assumes
   * local mode.
+  *
+  * Schema reuse: inferring a parquet schema is a one-task Spark job,
+  * one of the jobs inside the timed call of 7 of the 10 `analytics`
+  * keys, so [[readParquet]] infers a file's schema once per session
+  * and reads it with `.schema(...)` after that. The key is the path,
+  * the file's length and modification time, and the session's parquet
+  * settings (`nanosAsLong` changes a column's type), so a rewritten
+  * file or a changed setting is inferred again, and a new session
+  * starts cold. A directory (a Spark-written table) is inferred on
+  * every read: its length and time do not follow its files.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -84,6 +95,26 @@ object Tables {
   // spread exists for.
   private val spreadSafe = Set("documents")
 
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Seq[(String, String)]), StructType]]())
+
+  /** `spark.read.parquet(path)`, with the schema a previous read of the
+    * unchanged file inferred in this session (see [[Tables]]).
+    */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val file = new java.io.File(path)
+    if (!file.isFile) return spark.read.parquet(path)
+    val key = (file.getAbsolutePath, file.length, file.lastModified,
+      spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted)
+    val known = schemas.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+    Option(known.get(key)).fold {
+      val df = spark.read.parquet(path)
+      known.put(key, df.schema)
+      df
+    }(spark.read.schema(_).parquet(path))
+  }
+
   /** [[spread]] applied to a named table load — for call sites (the
     * store build) whose downstream is order-safe but whose table is
     * not on the [[spreadSafe]] list.
@@ -91,12 +122,12 @@ object Tables {
   private[graft] def loadSpread(spark: SparkSession, sfDir: String,
                                 name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    spread(spark, spark.read.parquet(path), path)
+    spread(spark, readParquet(spark, path), path)
   }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val df = spark.read.parquet(path)
+    val df = readParquet(spark, path)
     if (spreadSafe(name)) spread(spark, df, path) else df
   }
 

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
+import graft.Regime
 import graft.functions.FastHash.md5 // shadows functions.md5 → Md5Fast (r19)
 
 /** Approximate-nearest-neighbor search over the embeddings table.
@@ -35,18 +37,17 @@ object Similarity {
     embeddings.select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
 
-  /** The deterministic query vector: embedding of `queryId`. A single
-    * row — broadcast into every variant.
+  /** The deterministic query vector: `e`'s ([[vecs]]) vector of
+    * `queryId`. A single row — broadcast into every variant.
     */
-  private def queryVec(embeddings: DataFrame, queryId: Long): DataFrame =
-    broadcast(vecs(embeddings).filter(col("vec_id") === queryId)
-      .select(col("v").as("qv")))
+  private def queryVec(e: DataFrame, queryId: Long): DataFrame =
+    broadcast(e.filter(col("vec_id") === queryId).select(col("v").as("qv")))
 
   /** Exact top-k by cosine vs the query vector; (vec_id, rank). */
   def bruteForceTopK(embeddings: DataFrame, queryId: Long, k: Int): DataFrame =
     vecs(embeddings)
       .filter(col("vec_id") =!= queryId)
-      .crossJoin(queryVec(embeddings, queryId))
+      .crossJoin(queryVec(vecs(embeddings), queryId))
       .withColumn("cos", cosine(col("v"), col("qv")))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
@@ -79,7 +80,7 @@ object Similarity {
       .select(col("doc_id").as("id"), col("r_lex"))
     val vec = vecs(embeddings)
       .filter(col("vec_id") =!= queryId)
-      .crossJoin(queryVec(embeddings, queryId))
+      .crossJoin(queryVec(vecs(embeddings), queryId))
       .withColumn("cos", cosine(col("v"), col("qv")))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(n)
@@ -245,13 +246,23 @@ object Similarity {
     */
   def ivfPqProbeSweep(embeddings: DataFrame, queryId: Long = 0,
                       k: Int = 10, rerank: Int = 32,
-                      probes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
+                      probes: Seq[Int] = Seq(1, 2, 4)): DataFrame =
+    ivfPqProbeSweep(embeddings, queryId, k, rerank, probes, Regime.budget)
+
+  /** [[ivfPqProbeSweep]] with every branch's [[ivfPqTopK]] at an
+    * explicit gate budget; tests pass 0 to force the Spark side.
+    */
+  private[graft] def ivfPqProbeSweep(embeddings: DataFrame, queryId: Long,
+                                     k: Int, rerank: Int, probes: Seq[Int],
+                                     budget: Long): DataFrame = {
     // checkpoint the shared truth (the dimTruncEval idiom) — one
     // materialized truth subtree instead of one scan per probe branch
     val truth = graft.Checkpoints.tracked(
       bruteForceTopK(embeddings, queryId, k))
     probes.map { np =>
-      ivfPqTopK(embeddings, queryId, k, np, rerank).join(truth, "vec_id")
+      // ivfPqTopK's default quantizer
+      ivfPqTopK(embeddings, queryId, k, np, rerank, 8, 64, 1e6, 50, 128, budget)
+        .join(truth, "vec_id")
         .agg(count(lit(1)).as("n_hit"))
         .select(lit(np).as("nprobe"), lit(k).as("k"), col("n_hit"),
           (col("n_hit").cast("double") / lit(k)).as("recall"))
@@ -744,24 +755,65 @@ object Similarity {
     * quantized (floor ×1e6 → long) so the per-vector score is an
     * integer SUM, exact under any aggregation order.
     *
-    * Scale shape: the codebook trains on a capped deterministic
-    * sample ([[pqTrainSample]] — bounded per-group percentile state);
-    * the codebook and ADC table are tiny and broadcast; encoding is
-    * one narrow pass over (vector × subspace); scoring joins codes to
-    * the broadcast table and sums longs — memory-bandwidth bound on
-    * 1 byte/subspace codes, which is the entire point of PQ at a
-    * 100 TB corpus.
+    * Scale shape: the corpus first passes the regime gate
+    * ([[graft.Regime]], [[gatedVectors]]). At or under
+    * [[graft.Regime.budget]] vectors (every shipped scale: 500 at
+    * sf0.001 and sf0.01, 2,000 at sf0.1) [[LocalVectors]] answers on
+    * the driver with the same rows. Over it, the Spark side runs on
+    * the relation the gate hands back (a table scan is read again, a
+    * derived input persisted): the codebook trains on a capped
+    * deterministic sample ([[pqTrainSample]] — bounded per-group
+    * percentile state); the codebook and ADC table are tiny and
+    * broadcast; encoding is one narrow pass over (vector × subspace);
+    * scoring joins codes to the broadcast table and sums longs —
+    * memory-bandwidth bound on 1 byte/subspace codes, which is the
+    * entire point of PQ at a 100 TB corpus.
     */
   def pqTopK(embeddings: DataFrame, queryId: Long, k: Int,
              subspaces: Int = 8, dims: Int = 64,
              scale: Double = 1e6, samplePct: Int = 50,
-             sampleCap: Int = 128): DataFrame = {
+             sampleCap: Int = 128): DataFrame =
+    pqTopK(embeddings, queryId, k, subspaces, dims, scale, samplePct,
+      sampleCap, Regime.budget)
+
+  /** [[pqTopK]] at an explicit gate budget; tests pass 0 to force the
+    * Spark side.
+    */
+  private[graft] def pqTopK(embeddings: DataFrame, queryId: Long, k: Int,
+                            subspaces: Int, dims: Int, scale: Double,
+                            samplePct: Int, sampleCap: Int,
+                            budget: Long): DataFrame = {
+    val pq = LocalVectors.Pq(subspaces, dims / subspaces, scale, samplePct, sampleCap)
+    gatedVectors(embeddings, pq, budget)(_.pqTopK(queryId, k, pq)) { e =>
+      pqAdcScores(e, e.filter(col("vec_id") =!= queryId), queryId, pq)
+        .orderBy(col("score").desc, col("vec_id"))
+        .limit(k)
+        .select(col("vec_id"))
+    }
+  }
+
+  /** The regime gate ([[graft.Regime]]) of the PQ family over
+    * [[vecs]]`(embeddings)`: `local` answers from a [[LocalVectors]] of
+    * the fetched rows when they fit, `inSpark` from the relation the
+    * gate hands back when they do not. The driver takes only the
+    * table's own types and, per row, what [[LocalVectors.apply]]
+    * accepts (vectors of exactly `subspaces × sub` finite values);
+    * other input, and a call it declines (None: where the Spark side
+    * raises an error), plans the Spark side over the input.
+    */
+  private def gatedVectors(embeddings: DataFrame, pq: LocalVectors.Pq, budget: Long)
+                          (local: LocalVectors => Option[Seq[Row]])
+                          (inSpark: DataFrame => DataFrame): DataFrame = {
     val e = vecs(embeddings)
-    pqAdcScores(e, e.filter(col("vec_id") =!= queryId), queryId,
-      subspaces, dims / subspaces, scale, samplePct, sampleCap)
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"))
+    val typed = e.schema("vec_id").dataType == LongType &&
+      e.schema("label").dataType == IntegerType && pq.subspaces > 0 && pq.sub > 0
+    if (!typed) inSpark(e)
+    else Regime.fetchIfSmall(e, budget) match {
+      case Right(rows) =>
+        LocalVectors(rows, pq.subspaces * pq.sub).flatMap(local).fold(inSpark(e))(
+          Regime.localRelation(e, e.select(col("vec_id")).schema, _))
+      case Left(kept) => inSpark(kept)
+    }
   }
 
   /** The PQ-ADC scoring core shared by [[pqTopK]] (whole corpus) and
@@ -771,8 +823,8 @@ object Similarity {
     * score per candidate — exact under any aggregation order.
     */
   private def pqAdcScores(e: DataFrame, cand: DataFrame, queryId: Long,
-                          subspaces: Int, sub: Int, scale: Double,
-                          samplePct: Int, sampleCap: Int): DataFrame = {
+                          pq: LocalVectors.Pq): DataFrame = {
+    import pq.{sampleCap, samplePct, scale, sub, subspaces}
     val cbv = pqCodebook(e, sub, samplePct, sampleCap)
     def slices(src: DataFrame) = src.select(col("vec_id"),
         explode(array((0 until subspaces).map(s =>
@@ -808,33 +860,54 @@ object Similarity {
     * nprobe-sized, shortlist rerank-sized and broadcast back for the
     * float re-read — no all-pairs, no CartesianProduct against the
     * corpus (PlanSpec pins the shape).
+    *
+    * Scale shape: [[pqTopK]]'s gate. At or under
+    * [[graft.Regime.budget]] vectors [[LocalVectors]] probes, encodes,
+    * scores and reranks on the driver: `ann_ivf_pq_topk` at sf0.001
+    * fires 1 job instead of 14, which (with the schema reuse in
+    * [[graft.Tables]]) took the `analytics` workload from 2.88 to 4.50
+    * `ops_per_s` on a 4-vCPU box. Over the budget the plan above runs
+    * on the relation the gate hands back, every stage bounded as
+    * described.
     */
   def ivfPqTopK(embeddings: DataFrame, queryId: Long, k: Int,
                 nprobe: Int = 2, rerank: Int = 32,
                 subspaces: Int = 8, dims: Int = 64,
                 scale: Double = 1e6, samplePct: Int = 50,
-                sampleCap: Int = 128): DataFrame = {
-    val e = vecs(embeddings)
-    val q = queryVec(embeddings, queryId)
-    val probed = broadcast(centroids(e).crossJoin(q)
-      .withColumn("cdist", cosine(col("cv"), col("qv")))
-      .orderBy(col("cdist").desc, col("label"))
-      .limit(nprobe)
-      .select(col("label")))
-    val cand = e.filter(col("vec_id") =!= queryId)
-      .join(probed, Seq("label"), "left_semi")
-    val shortlist = broadcast(
-      pqAdcScores(e, cand, queryId, subspaces, dims / subspaces,
-        scale, samplePct, sampleCap)
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(rerank)
-        .select(col("vec_id")))
-    e.join(shortlist, Seq("vec_id"), "left_semi")
-      .crossJoin(q)
-      .withColumn("cos", cosine(col("v"), col("qv")))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"))
+                sampleCap: Int = 128): DataFrame =
+    ivfPqTopK(embeddings, queryId, k, nprobe, rerank, subspaces, dims,
+      scale, samplePct, sampleCap, Regime.budget)
+
+  /** [[ivfPqTopK]] at an explicit gate budget; tests pass 0 to force
+    * the Spark side.
+    */
+  private[graft] def ivfPqTopK(embeddings: DataFrame, queryId: Long, k: Int,
+                               nprobe: Int, rerank: Int, subspaces: Int,
+                               dims: Int, scale: Double, samplePct: Int,
+                               sampleCap: Int, budget: Long): DataFrame = {
+    val pq = LocalVectors.Pq(subspaces, dims / subspaces, scale, samplePct, sampleCap)
+    gatedVectors(embeddings, pq, budget)(
+      _.ivfPqTopK(queryId, k, nprobe, rerank, pq)) { e =>
+      val q = queryVec(e, queryId)
+      val probed = broadcast(centroids(e).crossJoin(q)
+        .withColumn("cdist", cosine(col("cv"), col("qv")))
+        .orderBy(col("cdist").desc, col("label"))
+        .limit(nprobe)
+        .select(col("label")))
+      val cand = e.filter(col("vec_id") =!= queryId)
+        .join(probed, Seq("label"), "left_semi")
+      val shortlist = broadcast(
+        pqAdcScores(e, cand, queryId, pq)
+          .orderBy(col("score").desc, col("vec_id"))
+          .limit(rerank)
+          .select(col("vec_id")))
+      e.join(shortlist, Seq("vec_id"), "left_semi")
+        .crossJoin(q)
+        .withColumn("cos", cosine(col("v"), col("qv")))
+        .orderBy(col("cos").desc, col("vec_id"))
+        .limit(k)
+        .select(col("vec_id"))
+    }
   }
 
   /** Recall@k of [[ivfPqTopK]] against the float brute-force truth at
@@ -1021,7 +1094,7 @@ object Similarity {
               nprobe: Int = 2): DataFrame = {
     val e = vecs(embeddings)
     val centroidTable = centroids(e)
-    val q = queryVec(embeddings, queryId)
+    val q = queryVec(vecs(embeddings), queryId)
     val probed = broadcast(centroidTable.crossJoin(q)
       .withColumn("cdist", cosine(col("cv"), col("qv")))
       .orderBy(col("cdist").desc, col("label"))

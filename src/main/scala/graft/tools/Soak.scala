@@ -11,8 +11,9 @@ package graft.tools
   * `keys` is a comma list, `bench` (the full benched set) or
   * `heaviest` (the slowest keys of the last `graft.Bench` sweep, see
   * [[heaviest]]); omitted, the [[defaultKeys]].
-  * e.g. sf10, default keys, 1 rep (the forked JVM already defaults to
-  * -Xmx48g via build.sbt — override with SPARK_DRIVER_MEM):
+  * e.g. sf10, default keys, 1 rep (the forked JVM's heap defaults to
+  * half the box's memory, at most 48g, via build.sbt — override with
+  * SPARK_DRIVER_MEM):
   *   sbt "runMain graft.tools.Soak target/sf10 100"
   * or warm 3-rep medians of the heaviest sweep keys, the denoised
   * re-measurement of a noisy sweep:

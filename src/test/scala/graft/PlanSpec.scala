@@ -99,8 +99,15 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), "top-k must not globally sort")
   }
 
+  /** The Spark side (gate budget 0) of the PQ family's keys: at
+    * sf0.001 the embeddings fit the regime gate, and the driver side
+    * has no plan to guard.
+    */
+  private def embeddings = Tables.embeddings(spark, dir)
+
   test("ann_pq_topk: codebook trains on the capped md5-bucket sample") {
-    val p = plan("ann_pq_topk")
+    val p = graft.pipeline.Similarity.pqTopK(embeddings, 0, 10, 8, 64, 1e6, 50, 128, 0)
+      .queryExecution.executedPlan.toString
     // sample filter evaluates directly on the scan, before any agg
     // (md5 routes through md5_fast since r19 — match the prefix)
     assert(p.contains("conv(substring(md5"),
@@ -117,7 +124,8 @@ class PlanSpec extends AnyFunSuite {
     // three stacked ivfPqTopK branches — each must preserve the
     // composed index's plan: semi-join pruning, no corpus cross-join
     // (the query-vector crossJoin is 1-row broadcast, never Cartesian)
-    val p = plan("ann_ivfpq_probe_sweep")
+    val p = graft.pipeline.Similarity.ivfPqProbeSweep(embeddings, 0, 10, 32, Seq(1, 2, 4), 0)
+      .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
       "no probe point may fall to a Cartesian corpus product")
     assert(p.contains("LeftSemi"),
@@ -202,7 +210,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("ann_ivf_pq_topk: centroid semi-join prunes; shortlist bounded; no cartesian") {
-    val p = plan("ann_ivf_pq_topk")
+    val p = graft.pipeline.Similarity.ivfPqTopK(embeddings, 0, 10, 2, 32, 8, 64, 1e6, 50, 128, 0)
+      .queryExecution.executedPlan.toString
     assert(p.contains("LeftSemi"),
       "probed labels and the rerank shortlist must prune via semi-joins")
     assert(!p.contains("CartesianProduct"),

@@ -43,4 +43,18 @@ class RegimeSpec extends AnyFunSuite {
     assert(Regime.fetchIfSmall(df, 10).map(_.length) == Right(10))
     Checkpoints.releaseCaches()
   }
+
+  test("a file scan is fetched and handed back without a persist") {
+    val sc = spark.sparkContext
+    val df = Tables.region(spark, SharedSpark.sfDir).select("r_regionkey", "r_name")
+    val persisted = sc.getPersistentRDDs.keySet
+    Regime.fetchIfSmall(df, 2) match {
+      case Left(kept) =>
+        assert(kept eq df)
+        assert(kept.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      case Right(rows) => fail(s"${rows.length} rows fetched over a budget of 2")
+    }
+    assert(Regime.fetchIfSmall(df).map(_.length) == Right(5))
+    assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty)
+  }
 }

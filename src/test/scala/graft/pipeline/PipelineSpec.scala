@@ -350,6 +350,79 @@ class PipelineSpec extends AnyFunSuite {
       s"pq ${pq.toSet} vs brute ${bf}")
   }
 
+  test("vector top-k: the driver and Spark regimes give identical rows") {
+    import org.apache.spark.sql.DataFrame
+    // budget 0 forces the Spark side; the shared budget runs the driver
+    val budget = graft.Regime.budget
+    // the codebook sample's md5 bucket of a vec_id
+    def hb(id: Long) = {
+      val h = java.security.MessageDigest.getInstance("MD5").digest(id.toString.getBytes("UTF-8"))
+      (((h(0) & 0xff) << 8) | (h(1) & 0xff)) % 100
+    }
+    val (in, out) = (1L to 60L).partition(hb(_) < 60)
+    // at samplePct 60: label 4 has no sampled row, label 5 one (under
+    // a cap of 3); dyadic components keep every centroid sum exact
+    val labelOf = (out.take(3).map(_ -> 4) ++ (in.take(1) ++ out.slice(3, 5)).map(_ -> 5) ++
+      (in.drop(1) ++ out.drop(5)).zipWithIndex.map { case (id, i) => id -> (1 + i % 3) }).toMap
+    def vec(id: Long) = Seq.tabulate(4)(d => (((id * 37 + d * 11) % 9) - 4) / 4.0f)
+    val rows = (1L to 60L).map(id => (id, vec(id), labelOf(id))) ++ Seq(
+      (1000L, Seq.fill(4)(0.0f), 1),          // a zero vector
+      (2001L, vec(7), labelOf(7)),             // copies of vector 7: tied
+      (2002L, vec(7), labelOf(7)),             // ADC scores and cosines
+      // where labels 8 and 9 are sampled, their entries are equally far
+      // from 3003's slices: its codes tie
+      (3001L, Seq(3.5f, 1.5f, 3.5f, 1.5f), 8),
+      (3002L, Seq(1.5f, 3.5f, 1.5f, 3.5f), 9),
+      (3003L, Seq.fill(4)(2.5f), 3),
+      // query 3004 is label 10's centroid; 8's and 9's tie behind it
+      (3004L, Seq.fill(4)(5.0f), 10))
+    val e = spark.sparkContext.parallelize(rows, 3).toDF("vec_id", "embedding", "label")
+    assert(out.length >= 5 && in.length >= 4)
+    // every vector but the query gets a score, ties included
+    val all = Similarity.pqTopK(e, 7, 1000, 2, 4, 1e6, 60, 3, budget).as[Long].collect()
+    assert(all.length == 66 && all.indexOf(2002L) == all.indexOf(2001L) + 1)
+    def same(what: Any, driver: DataFrame, inSpark: DataFrame): Unit = {
+      assert(driver.isLocal && !inSpark.isLocal, what)
+      assert(driver.collect().toSeq == inSpark.collect().toSeq, what)
+      assert(driver.schema == inSpark.schema, what)
+    }
+    // query 7 has tied copies, 1000 is the zero vector, 99999 is absent
+    for (q <- Seq(7L, 1000L, 3004L, 99999L); (pct, cap) <- Seq((60, 3), (100, 100))) {
+      for (k <- Seq(4, 1000))
+        same((q, pct, cap, k), Similarity.pqTopK(e, q, k, 2, 4, 1e6, pct, cap, budget),
+          Similarity.pqTopK(e, q, k, 2, 4, 1e6, pct, cap, 0))
+      // nprobe 10 reaches every label; k and rerank 1000 exceed the
+      // candidates
+      for ((k, nprobe, rerank) <- Seq((3, 1, 4), (5, 2, 2), (1000, 10, 1000))) {
+        val what = (q, pct, cap, k, nprobe, rerank)
+        same(what, Similarity.ivfPqTopK(e, q, k, nprobe, rerank, 2, 4, 1e6, pct, cap, budget),
+          Similarity.ivfPqTopK(e, q, k, nprobe, rerank, 2, 4, 1e6, pct, cap, 0))
+      }
+    }
+    graft.Checkpoints.releaseCaches()
+  }
+
+  test("ivf-pq top-k over a 500-row frame fires at most 2 jobs") {
+    import org.apache.spark.graft.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val emb = Tables.embeddings(spark, graft.SharedSpark.sfDir)
+    assert(emb.count() == 500)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    val got = try {
+      val r = Similarity.ivfPqTopK(emb, 0, 10).collect()
+      ListenerBusDrain.drain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(got.length == 10)
+    assert(jobs.get <= 2, s"${jobs.get} jobs")
+  }
+
   test("pq training sample caps per label and is bucket-deterministic") {
     val emb = graft.SharedSpark.spark.read
       .parquet(graft.SharedSpark.sfDir + "/embeddings.parquet")
