@@ -15,6 +15,38 @@ object InferenceQueries {
   private val spoValues = Ontology.subPropertyOf
     .map { case (a, b) => s"('$a','$b')" }.mkString(", ")
 
+  /** `infer_sameas_canon` at an explicit regime budget
+    * ([[SameAs.canonicalize]]); tests pass 0 to plan the Spark side.
+    */
+  private[graft] def sameAsCanon(s: SparkSession, dir: String, budget: Long): DataFrame = {
+    val cust = TripleStore.dimensionTriples(s, dir)
+      .filter(col("s").startsWith("cust:"))
+    def alias(space: String) = regexp_replace(col("s"), "^cust:", space + ":")
+    val split = cust.withColumn("s",
+      when(col("p") === ":name", alias("custA"))
+        .when(col("p") === ":acctbal", alias("custB"))
+        .otherwise(col("s")))
+    // both link legs (cust→custA, custA→custB) from one pass over the
+    // distinct subjects: one exchange, not one per leg
+    def link(from: Column, to: Column) = struct(from.as("from"), to.as("to"))
+    val links = cust.select(col("s")).distinct()
+      .select(explode(array(link(col("s"), alias("custA")),
+        link(alias("custA"), alias("custB")))).as("l"))
+      .select(col("l.from").as("s"), lit(SameAs.OWL_SAMEAS).as("p"),
+        col("l.to").as("o"), lit(null).cast("double").as("o_num"),
+        lit(true).as("o_is_iri"), lit(null).cast("string").as("lang"))
+    // canonicalize's gate reads the assembled store once (persisting it
+    // over the regime budget), and both star arms read the merged
+    // store: at sf0.001 (1,050 rows) a local relation rewritten on the
+    // driver, over the budget a checkpoint, so the rewrite runs once
+    // either way
+    val merged = SameAs.canonicalize(s, split.unionByName(links), budget)
+    merged.filter(col("p") === ":name")
+      .select(col("s").as("c"), col("o").as("n"))
+      .join(merged.filter(col("p") === ":acctbal")
+        .select(col("s").as("c"), col("o_num").as("b")), Seq("c"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "infer_subclass_closure" -> { (s, _) =>
       s.createDataFrame(Ontology.subClassClosure.toSeq.sorted).toDF("sub", "sup")
@@ -25,37 +57,7 @@ object InferenceQueries {
     // (cust→custA→custB, so resolution must be transitive). The
     // name+balance star join below ONLY matches if canonicalization
     // merged the identities — unmerged, it returns zero rows.
-    "infer_sameas_canon" -> { (s, dir) =>
-      val cust = TripleStore.dimensionTriples(s, dir)
-        .filter(col("s").startsWith("cust:"))
-      def alias(space: String) = regexp_replace(col("s"), "^cust:", space + ":")
-      val split = cust.withColumn("s",
-        when(col("p") === ":name", alias("custA"))
-          .when(col("p") === ":acctbal", alias("custB"))
-          .otherwise(col("s")))
-      val subs = cust.select(col("s")).distinct()
-      def sameAs(from: Column, to: Column) = subs.select(
-        from.as("s"), lit(SameAs.OWL_SAMEAS).as("p"), to.as("o"),
-        lit(null).cast("double").as("o_num"), lit(true).as("o_is_iri"),
-        lit(null).cast("string").as("lang"))
-      val links = sameAs(col("s"), alias("custA"))
-        .unionAll(sameAs(alias("custA"), alias("custB")))
-      // the assembled (split ∪ links) store feeds ~6 consumers inside
-      // canonicalize (sameAs slice → CC edges + 2 vertex refs, the
-      // base filter, the rewrite joins) — materialize it ONCE so each
-      // reference is a cheap scan instead of a store-scan + two
-      // distinct legs (r19, guide §5 reuse rule)
-      val assembled = graft.Checkpoints.tracked(split.unionByName(links))
-      // both star arms read the merged store — checkpoint it so the
-      // canonicalization (GraphX CC + two rewrite joins + distinct)
-      // runs ONCE, not once per arm
-      val merged = graft.Checkpoints.tracked(
-        SameAs.canonicalize(s, assembled))
-      merged.filter(col("p") === ":name")
-        .select(col("s").as("c"), col("o").as("n"))
-        .join(merged.filter(col("p") === ":acctbal")
-          .select(col("s").as("c"), col("o_num").as("b")), Seq("c"))
-    },
+    "infer_sameas_canon" -> ((s, dir) => sameAsCanon(s, dir, graft.Regime.budget)),
     "infer_nodes_with_label" -> { (s, dir) =>
       Reasoner.nodesWithLabel(s, TripleStore.dimensionTriples(s, dir), ":Agent")
     },

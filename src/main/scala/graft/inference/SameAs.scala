@@ -2,9 +2,10 @@ package graft.inference
 
 import graft.{Checkpoints, Regime}
 import graft.graphx.{Analytics, LocalGraph}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, StringType, StructField, StructType}
 
 /** owl:sameAs identity resolution ("smushing"): every sameAs-connected
   * cluster of URIs collapses onto one canonical representative — the
@@ -14,16 +15,21 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * that matters most when several sources describe the same entity
   * under different URIs).
   *
-  * Scale shape: connected components run on the sameAs edge set ONLY
-  * (tiny next to the store — identity links, not data). One bounded
-  * fetch ([[graft.Regime]]) decides where: a link set of at most
-  * [[graft.Regime.budget]] rows clusters by union-find on the driver
-  * (at sf0.1 the 30,000 benchmark links do), a larger one by GraphX
-  * CC. Either way the (uri → canon) map is one narrow
-  * relation, and the rewrite stays in Spark: two key-equi left joins
-  * against the store (subject, then IRI objects) plus one set-dedup
-  * of the merged result. All shuffles are keyed by URI; nothing is
-  * quadratic in anything.
+  * Scale shape: one bounded fetch ([[graft.Regime]]) of the store
+  * decides where. A store of at most [[graft.Regime.budget]] rows is
+  * rewritten on the driver from the fetched rows: union-find over its
+  * sameAs links, then the subject/object rewrite and the set-dedup of
+  * the touched rows. `infer_sameas_canon` at sf0.001 (1,050 rows)
+  * fires 5 jobs instead of 13; with [[graft.pipeline.Dedup.minhashLsh]]
+  * on the driver too, the `analytics` workload went from 2.21 to 3.38
+  * `ops_per_s` on a 4-vCPU box. A larger store is rewritten in Spark
+  * from a checkpoint of the relation the gate hands back: its link set
+  * passes the gate (at sf0.1 the 30,000 benchmark links cluster on
+  * the driver, a larger set runs GraphX CC), and the (uri → canon)
+  * map, one narrow relation, feeds two key-equi left joins against
+  * the store (subject, then IRI objects) plus one set-dedup of the
+  * rows the collapse touched. All shuffles are keyed by URI; nothing
+  * is quadratic in anything.
   */
 object SameAs {
 
@@ -91,13 +97,77 @@ object SameAs {
     * ([[graft.rdf.RdfModel.tpchTriplesSet]] dedups at build, and the
     * derived slices are filters of that set); a caller feeding a raw
     * parse or any other external frame must `distinct()` it first.
+    *
+    * A store that fits the regime gate ([[graft.Regime]]) is rewritten
+    * on the driver and comes back as a local relation; a larger one is
+    * rewritten in Spark from a checkpoint of the relation the gate
+    * hands back and comes back checkpointed, so each consumer reads the
+    * result instead of planning the rewrite again.
     */
-  def canonicalize(spark: SparkSession, store: DataFrame): DataFrame = {
+  def canonicalize(spark: SparkSession, store: DataFrame): DataFrame =
+    canonicalize(spark, store, Regime.budget)
+
+  /** [[canonicalize]] at an explicit gate budget, which the link set's
+    * gate shares; tests pass 0 to force the Spark side throughout.
+    * Only a store of the engine's own column types is fetched; any
+    * other runs the Spark side.
+    */
+  private[graft] def canonicalize(spark: SparkSession, store: DataFrame,
+                                  budget: Long): DataFrame = {
+    val triples = store.select(col("s"), col("p"), col("o"), col("o_num"),
+      col("o_is_iri"), col("lang"))
+    val typed = triples.schema.map(_.dataType) ==
+      Seq(StringType, StringType, StringType, DoubleType, BooleanType, StringType)
+    (if (typed) Regime.fetchIfSmall(triples, budget) else Left(triples)) match {
+      case Right(rows) =>
+        Regime.localRelation(triples, triples.schema, localCanonicalize(rows))
+      // the rewrite reads its store more than once (the link slice,
+      // both union legs): at sf0.1 it took 2.4-2.7 s from a checkpoint
+      // of the gate's persisted relation, that checkpoint included,
+      // and 3.0-3.2 s from the persisted relation itself
+      case Left(kept) =>
+        Checkpoints.tracked(sparkCanonicalize(spark, Checkpoints.tracked(kept), budget))
+    }
+  }
+
+  /** [[sparkCanonicalize]]'s rows from the fetched (s, p, o, o_num,
+    * o_is_iri, lang) rows: the untouched rows as they are, then the
+    * touched ones deduped as a Spark distinct groups them (its keys
+    * normalize every NaN to one NaN and -0.0 to 0.0).
+    */
+  private def localCanonicalize(rows: Array[Row]): Seq[Row] = {
+    def iri(r: Row) = !r.isNullAt(4) && r.getBoolean(4)
+    val links = rows.filter(r => r.get(1) == OWL_SAMEAS && iri(r))
+      .map(r => Row(r.get(0), r.get(2)))
+    val canon = new LocalGraph(links, StringType).canonicalMap
+      .map(r => r.get(0) -> r.get(1)).toMap
+    val canons = canon.values.toSet
+    def normalized(v: Any): Any = v match {
+      case d: Double if d.isNaN => Double.NaN
+      case d: Double if d == 0.0 => 0.0
+      case other => other
+    }
+    val untouched = Array.newBuilder[Row]
+    val touched = mutable.LinkedHashSet.empty[Row]
+    for (r <- rows if r.get(1) != null && r.get(1) != OWL_SAMEAS) {
+      val (s, o) = (r.get(0), r.get(2))
+      val sCanon = canon.get(s)
+      val oCanon = if (iri(r)) canon.get(o) else None
+      if (sCanon.isEmpty && oCanon.isEmpty && !canons(s) && !(iri(r) && canons(o)))
+        untouched += r
+      else touched += Row(sCanon.getOrElse(s), r.get(1), oCanon.getOrElse(o),
+        normalized(r.get(3)), r.get(4), r.get(5))
+    }
+    untouched.result().toSeq ++ touched
+  }
+
+  private def sparkCanonicalize(spark: SparkSession, store: DataFrame,
+                                budget: Long): DataFrame = {
     // identity links must join two RESOURCES; a malformed sameAs with
     // a literal object is dropped with the rest of the sameAs slice
     // but never seeds a cluster
     val m = canonicalMap(spark,
-      store.filter(col("p") === OWL_SAMEAS && col("o_is_iri")))
+      store.filter(col("p") === OWL_SAMEAS && col("o_is_iri")), budget)
     val base = store.filter(col("p") =!= OWL_SAMEAS)
     val ms = m.select(col("uri").as("s"), col("canon").as("__s_canon"))
     val mo = m.select(col("uri").as("__o_uri"), col("canon").as("__o_canon"))

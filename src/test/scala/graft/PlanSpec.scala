@@ -1,10 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.IsNotNull
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the plans we tuned for: pushdown reaches the scans, small
@@ -39,6 +43,25 @@ class PlanSpec extends AnyFunSuite {
         e.references.map(_.name).toSet == Set("p")),
         s"store scan without a constant-predicate filter: ${s.simpleString(400)}")
     }
+  }
+
+  /** The executed plan of every query `run` executes, each
+    * checkpoint included.
+    */
+  private def executedPlans(run: => Unit): Seq[String] = {
+    val plans = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      run
+      ListenerBusDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
   }
 
   test("q3_join_topk: pushdown + broadcast dims + TakeOrderedAndProject") {
@@ -1353,10 +1376,20 @@ class PlanSpec extends AnyFunSuite {
   test("infer_sameas_canon: canon pick is a keyed agg + join, never a window") {
     // one giant component + dust is the usual identity-graph shape;
     // a window over comp would sort the blob inside one task, while
-    // groupBy(comp).min partial-aggregates map-side and joins back
-    val p = plan("infer_sameas_canon")
-    assert(!p.contains("Window"),
+    // groupBy(comp).min partial-aggregates map-side and joins back.
+    // The key's Spark side (budget 0): at sf0.001 its store fits the
+    // regime gate, and the driver side has no plan to guard. The canon
+    // pick runs inside the link map's checkpoint, so every plan the
+    // Spark side executes is read, not only the final one
+    val plans = executedPlans(
+      graft.inference.InferenceQueries.sameAsCanon(spark, dir, 0).collect())
+    assert(!plans.exists(_.contains("Window")),
       "per-component canon must not run through a window sort")
+    // hash or sort aggregate: `keys=[comp#..]` or `key=[comp#..]`
+    val partialMin = """keys?=\[comp#\d+L?\], functions=\[partial_min\(uri""".r
+    assert(plans.exists(partialMin.findFirstIn(_).isDefined),
+      "per-component canon must be a min keyed on comp, partial map-side")
+    graft.Checkpoints.releaseCaches()
   }
 
   test("text_unigram_surprisal: Zipf head broadcasts; only the tail shuffles by token") {

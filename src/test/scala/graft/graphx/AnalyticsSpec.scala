@@ -326,13 +326,14 @@ class AnalyticsSpec extends AnyFunSuite {
     // budget 0: both run their GraphX/Spark side, which caches
     Analytics.connectedComponents(spark, edges, 0).collect()
     Analytics.pageRank(spark, edges, 3, 1000000000L, 0).collect()
-    // the one release also covers the dedup persists and the reasoner's
-    // closure checkpoints
+    // the one release also covers the dedup persists (budget 0: the
+    // Spark side persists the shingle sets) and the reasoner's closure
+    // checkpoints
     val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy cat"),
       (3L, "a completely different sentence about nothing much"))
       .toDF("doc_id", "text")
-    graft.pipeline.Dedup.minhashLsh(docs).collect()
+    graft.pipeline.Dedup.minhashLsh(docs, 16, 4, 0.7, 0).collect()
     graft.inference.Closure.transitive(
       Seq(("a", "b"), ("b", "c"), ("c", "d")).toDF("sub", "sup")).collect()
     assert(spark.sparkContext.getPersistentRDDs.keySet.size > before.size)

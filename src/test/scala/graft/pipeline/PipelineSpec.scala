@@ -242,6 +242,67 @@ class PipelineSpec extends AnyFunSuite {
     assert(pairs == Set((1L, 2L)))
   }
 
+  test("minhash lsh: the driver and Spark regimes give identical rows") {
+    import org.apache.spark.sql.DataFrame
+    // budget 0 forces the band join and the verify joins; the shared
+    // budget hashes, bands and verifies on the driver
+    val budget = graft.Regime.budget
+    val corpus: Seq[(Long, String)] = Seq(
+      // exact duplicates
+      1L -> "alpha bravo charlie delta echo foxtrot golf hotel",
+      2L -> "alpha bravo charlie delta echo foxtrot golf hotel",
+      // Jaccard exactly 4/8 = 0.5, colliding in band 0 only
+      10L -> "romeo zulu tango xray kilo oscar whiskey alpha",
+      11L -> "romeo zulu tango xray kilo oscar hotel foxtrot",
+      // Jaccard exactly 7/10 = 0.7
+      20L -> "juliet alpha november romeo uniform delta foxtrot zulu victor kilo",
+      21L -> "juliet alpha november romeo uniform delta foxtrot zulu victor xray india",
+      // Jaccard 0.5, colliding in band 1 only
+      30L -> "papa lima sierra romeo golf quebec november zulu yankee tango",
+      31L -> "papa lima sierra romeo golf quebec november whiskey alpha",
+      // shingles repeated within a document: both sets are the same 4
+      40L -> "mike lima kilo mike lima kilo mike lima kilo echo",
+      41L -> "mike lima kilo mike lima kilo echo",
+      // under 3 tokens, and a null text
+      50L -> "two words", 51L -> "", 52L -> "   ", 53L -> "single", 54L -> null)
+    val d = spark.sparkContext.parallelize(corpus, 3).toDF("doc_id", "text")
+    val want = Map(
+      0.5 -> Set((1L, 2L), (10L, 11L), (20L, 21L), (30L, 31L), (40L, 41L)),
+      0.7 -> Set((1L, 2L), (20L, 21L), (40L, 41L)),
+      1.0 -> Set((1L, 2L), (40L, 41L)))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for ((tau, pairs) <- want) {
+      val driver = Dedup.minhashLsh(d, 16, 4, tau, budget)
+      val inSpark = Dedup.minhashLsh(d, 16, 4, tau, 0)
+      assert(driver.isLocal && !inSpark.isLocal, tau)
+      assert(driver.as[(Long, Long)].collect().toSet == pairs, tau)
+      assert(rows(driver) == rows(inSpark), tau)
+      assert(driver.schema == inSpark.schema, tau)
+    }
+    graft.Checkpoints.releaseCaches()
+  }
+
+  test("minhash lsh over a 500-row frame fires at most 2 jobs") {
+    import org.apache.spark.graft.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val d = Tables.documents(spark, graft.SharedSpark.sfDir)
+    assert(d.count() == 500)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    val got = try {
+      val r = Dedup.minhashLsh(d).collect()
+      ListenerBusDrain.drain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(got.nonEmpty)
+    assert(jobs.get <= 2, s"${jobs.get} jobs")
+  }
+
   test("dedup clusters map every doc to its component minimum") {
     val dd = docs(1L -> "a", 2L -> "b", 3L -> "c", 5L -> "d", 7L -> "e", 9L -> "f")
     val pairs = Seq((2L, 5L), (5L, 9L), (3L, 7L)).toDF("a", "b")
