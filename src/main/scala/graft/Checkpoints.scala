@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -101,10 +103,22 @@ object Checkpoints {
     */
   def seeded(seed: DataFrame = null): Generation = new Generation(seed)
 
-  /** Drain the registry, then sweep the context for remaining
-    * GraphX-typed RDDs: GraphX algorithms cache intermediate
-    * vertex/edge RDDs they never expose (e.g. Pregel's per-iteration
-    * graphs), so a sweep is the only complete release. Only GraphX
+  /** Wait until `sc` runs no job. A query can return before its last
+    * job ends: adaptive execution does not wait for a broadcast stage
+    * that an empty join side made unneeded, and that job still reads
+    * the query's checkpoints. Released under it, a checkpoint block is
+    * gone and the job fails, unseen by the caller.
+    */
+  private def settle(sc: SparkContext): Unit = {
+    ListenerBusDrain.drain(sc)
+    while (sc.statusTracker.getActiveJobIds.nonEmpty) Thread.sleep(1)
+  }
+
+  /** Wait for running jobs ([[settle]]), drain the registry, then
+    * sweep the context for remaining GraphX-typed RDDs: GraphX
+    * algorithms cache intermediate vertex/edge RDDs they never expose
+    * (e.g. Pregel's per-iteration graphs), so a sweep is the only
+    * complete release. Only GraphX
     * classes are swept — SQL/DataFrame caches are untouched.
     *
     * `blocking = true` waits for the block manager to actually drop
@@ -113,14 +127,15 @@ object Checkpoints {
     * the LPA medians spread).
     */
   def releaseCaches(blocking: Boolean = false): Unit = releases.synchronized {
+    val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    session.foreach(s => settle(s.sparkContext))
     val it = releases.iterator()
     while (it.hasNext) { it.next()(blocking); it.remove() }
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach { s =>
-        s.sparkContext.getPersistentRDDs.values
-          .filter(r => r.getClass.getName.startsWith("org.apache.spark.graphx") ||
-            r.name == "VertexRDD" || r.name == "EdgeRDD")
-          .foreach(_.unpersist(blocking))
-      }
+    session.foreach { s =>
+      s.sparkContext.getPersistentRDDs.values
+        .filter(r => r.getClass.getName.startsWith("org.apache.spark.graphx") ||
+          r.name == "VertexRDD" || r.name == "EdgeRDD")
+        .foreach(_.unpersist(blocking))
+    }
   }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * metadata-scale even at 100 TB).
   *
   * Design: [[TripleStore]] registers every relation it serves (the
-  * cached store and its dimension slice); the profile is computed
+  * persisted store, in either of its two forms, and its dimension
+  * slice); the profile is computed
   * LAZILY on the first multi-pattern BGP compile against that
   * relation and memoized, so the store build itself never pays the
   * pass and every later compile reads a map.
@@ -34,13 +35,18 @@ object TripleStats {
   final case class PredStat(n: Long, nSubjects: Long, nObjects: Long)
 
   /** A relation of at most this many rows is small enough to hold
-    * whole in one JVM: the SPARQL compiler broadcast-hints a pattern
-    * scan estimated at or under it (its join never shuffles the big
-    * side; AQE still upgrades larger sides at runtime when their
-    * measured size allows), and [[graft.Regime]], the one gate between
-    * the driver and the cluster, answers a graph operator or a seeded
-    * closure from the rows of an input of at most this many rows on
-    * the driver.
+    * whole in one JVM. It has three readers:
+    *  - the SPARQL compiler broadcast-hints a pattern scan estimated at
+    *    or under it (its join never shuffles the big side; AQE still
+    *    upgrades larger sides at runtime when their measured size
+    *    allows);
+    *  - [[graft.Regime]], the one gate between the driver and the
+    *    cluster, answers a graph operator or a seeded closure from the
+    *    rows of an input of at most this many rows on the driver;
+    *  - [[TripleStore]], through `Regime.budget`, persists a store of
+    *    at most this many triples as plain rows instead of Spark's
+    *    columnar cache (7× the memory, 10.2 MB at 65,095 triples,
+    *    and no generated batch-pruning code per scan).
     * Sized so such a relation (2-4 short string columns) stays well
     * under a 10 MB broadcast budget.
     */

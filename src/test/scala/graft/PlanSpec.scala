@@ -2,9 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.IsNotNull
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{FilterExec, LogicalRDD, QueryExecution, RDDScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions.col
@@ -18,19 +18,23 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
+  // the session whose store is the columnar cache (the shared
+  // session's sf0.001 store is served as persisted rows)
+  private lazy val columnar = SharedSpark.columnar
   private val dir = SharedSpark.sfDir
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+  private def plan(name: String, s: SparkSession = spark): String =
+    SparkEntry.queries(name)(s, dir).queryExecution.executedPlan.toString
 
-  /** Every scan of the cached triple store in `df`'s plan filters on a
-    * constant predicate, e.g. `[isnotnull(p#..), (p#.. = :hasNation)]`:
-    * the store is clustered by `p`, so the cached batches' min/max
-    * stats skip every batch outside it (RdfSpec pins the skip). A
-    * store scan with no `p` predicate reads every triple.
+  /** Every scan of the columnar store in `df`'s plan (a query on
+    * [[columnar]]) filters on a constant predicate, e.g.
+    * `[isnotnull(p#..), (p#.. = :hasNation)]`: the store is clustered
+    * by `p`, so the cached batches' min/max stats skip every batch
+    * outside it (RdfSpec pins the skip). A store scan with no `p`
+    * predicate reads every triple.
     */
   private def assertStoreScansPruned(df: DataFrame): Unit = {
-    val store = graft.rdf.TripleStore.triples(spark, dir)
+    val store = graft.rdf.TripleStore.triples(columnar, dir)
       .queryExecution.withCachedData
       .collectFirst { case r: InMemoryRelation => r.cacheBuilder }.get
     val scans = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(
@@ -79,11 +83,32 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("sparql_bgp_chain: patterns prune the predicate-partitioned store") {
-    assertStoreScansPruned(SparkEntry.queries("sparql_bgp_chain")(spark, dir))
+    assertStoreScansPruned(SparkEntry.queries("sparql_bgp_chain")(columnar, dir))
   }
 
   test("sparql_bgp_star: star patterns prune the partitioned store") {
-    assertStoreScansPruned(SparkEntry.queries("sparql_bgp_star")(spark, dir))
+    assertStoreScansPruned(SparkEntry.queries("sparql_bgp_star")(columnar, dir))
+  }
+
+  test("sparql_bgp_star on the row store: each pattern filters the persisted rows on p") {
+    // the shared session's store is within Regime.budget: its scans
+    // read the persisted row RDD directly, each under a p filter
+    val store = graft.rdf.TripleStore.triples(spark, dir)
+      .queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    val plan = SparkEntry.queries("sparql_bgp_star")(spark, dir).queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = helper.collectWithSubqueries(plan) {
+      case s: RDDScanExec if s.rdd eq store => s
+    }
+    val filtered = helper.collectWithSubqueries(plan) {
+      case f: FilterExec if (f.child match {
+        case s: RDDScanExec => s.rdd eq store
+        case _ => false
+      }) && f.condition.references.exists(_.name == "p") => f
+    }
+    assert(scans.nonEmpty, "the query must scan the persisted rows")
+    assert(filtered.size == scans.size, s"store scans without a p filter:\n$plan")
+    assert(helper.collectWithSubqueries(plan) { case s: InMemoryTableScanExec => s }.isEmpty)
   }
 
   test("sparql_bgp_star_bucketed: patterns scan the bucketed table") {
@@ -247,7 +272,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("rdf_describe: both lookup arms filter the cached triple relation") {
-    val p = plan("rdf_describe")
+    val p = plan("rdf_describe", columnar)
     assert(p.contains("InMemoryTableScan"), "describe must read the persisted store")
   }
 
@@ -684,7 +709,7 @@ class PlanSpec extends AnyFunSuite {
   test("rdf_reify: narrow explode, no shuffle past the store read") {
     // judge only the plan ABOVE the cached store (the InMemoryRelation
     // section replays the store-build plan, which legitimately shuffles)
-    val p = plan("rdf_reify").split("InMemoryRelation")(0)
+    val p = plan("rdf_reify", columnar).split("InMemoryRelation")(0)
     assert(p.contains("Generate explode"),
       "each statement expands in-task via explode")
     assert(!p.contains("Join") && !p.contains("Exchange hashpartitioning"),
@@ -776,7 +801,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("sparql_path_inverse: both inverse hops prune the partitioned store") {
-    assertStoreScansPruned(SparkEntry.queries("sparql_path_inverse")(spark, dir))
+    assertStoreScansPruned(SparkEntry.queries("sparql_path_inverse")(columnar, dir))
   }
 
   test("graph_resource_alloc: weighted wedges partial-agg; top-k heaps") {
@@ -949,7 +974,7 @@ class PlanSpec extends AnyFunSuite {
   test("sparql_path_seq_range: no closure — bounded joins keep scans visible") {
     // unlike the '+' form there is no checkpoint barrier, so the FULL
     // plan must show pruned predicate scans and equi-join composition
-    val df = SparkEntry.queries("sparql_path_seq_range")(spark, dir)
+    val df = SparkEntry.queries("sparql_path_seq_range")(columnar, dir)
     assertStoreScansPruned(df)
     assert(!df.queryExecution.executedPlan.toString.contains("CartesianProduct"))
   }
@@ -965,7 +990,7 @@ class PlanSpec extends AnyFunSuite {
     // the key's final frame sits on the closure's localCheckpoint, so
     // pin the COMPOSED edge relation the closure iterates over — that
     // is where leg pruning lives
-    val t = graft.rdf.TripleStore.triples(spark, dir)
+    val t = graft.rdf.TripleStore.triples(columnar, dir)
     val edges = graft.sparql.Compiler.seqEdges(t, Seq(
       graft.sparql.Ast.PathStep(":inRegion", inverse = false),
       graft.sparql.Ast.PathStep(":inRegion", inverse = true)))
@@ -1096,7 +1121,7 @@ class PlanSpec extends AnyFunSuite {
     // judge only the plan above the cached store (the InMemoryRelation
     // section replays the store build); the operator text repeats
     // "LeftAnti" per join detail line, so assert presence, not count
-    val p = plan("rdf_diff").split("InMemoryRelation")(0)
+    val p = plan("rdf_diff", columnar).split("InMemoryRelation")(0)
     assert(p.contains("LeftAnti"),
       "added/removed sides must be anti joins, not except/distinct plans")
     assert(!p.contains("CartesianProduct"))
@@ -1111,7 +1136,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("rdf_shape_validate: shape table broadcasts; path counts keyed") {
-    val p = plan("rdf_shape_validate").split("InMemoryRelation")(0)
+    val p = plan("rdf_shape_validate", columnar).split("InMemoryRelation")(0)
     assert(p.contains("BroadcastHashJoin"),
       "the ontology-sized shape table must broadcast onto the type scan")
     assert(p.contains("LeftOuter"),
@@ -1209,7 +1234,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("rdf_void_linksets: one partial-agg fold over the store") {
-    val p = plan("rdf_void_linksets").split("InMemoryRelation")(0)
+    val p = plan("rdf_void_linksets", columnar).split("InMemoryRelation")(0)
     assert(p.contains("partial_count"),
       "linkset counts must combine map-side")
     assert(!p.contains("Join"))
@@ -1280,7 +1305,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("rdf_graph_digest: narrow fold above the store, partial xor") {
-    val p = plan("rdf_graph_digest").split("InMemoryRelation")(0)
+    val p = plan("rdf_graph_digest", columnar).split("InMemoryRelation")(0)
     assert(!p.contains("Join"), "the digest is a pure aggregation")
     assert(p.contains("partial_bit_xor") || p.contains("bit_xor"),
       "the xor fold must combine map-side")
@@ -1364,7 +1389,7 @@ class PlanSpec extends AnyFunSuite {
     // the combo expansion unions plain sequences — each branch's
     // constant-predicate steps must still filter the store on `p`,
     // and the union must stay equi-join-only
-    val df = SparkEntry.queries("sparql_path_alt_in_seq")(spark, dir)
+    val df = SparkEntry.queries("sparql_path_alt_in_seq")(columnar, dir)
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("Union"), "alternation must expand to a union")
     assertStoreScansPruned(df)

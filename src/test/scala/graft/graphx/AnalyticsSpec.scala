@@ -295,7 +295,10 @@ class AnalyticsSpec extends AnyFunSuite {
       assert(rows(driver) == rows(inSpark), g)
       assert(driver.schema == inSpark.schema, g)
     }
-    for (g <- graphs) {
+    // a failed task fails the test even when no caller sees it: a job
+    // a query leaves running can read a checkpoint released under it
+    val failedTasks = new FailedTasks(spark.sparkContext)
+    try for (g <- graphs) {
       val e = g.toDF("src", "dst")
       // one iteration leaves remainders (1e9 div 3, div 6) in the final
       // ranks; three check the supersteps compose
@@ -317,7 +320,8 @@ class AnalyticsSpec extends AnyFunSuite {
         same(g, Analytics.resourceAllocation(ids, 50, wedgeBudget, budget),
           Analytics.resourceAllocation(ids, 50, wedgeBudget, 0))
       graft.Checkpoints.releaseCaches()
-    }
+    } finally failedTasks.close()
+    assert(failedTasks.seen.isEmpty, failedTasks.seen.mkString("\n"))
   }
 
   test("releaseCaches unpersists every RDD a graph query cached") {
@@ -370,4 +374,27 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(w1 == w2)
     graft.Checkpoints.releaseCaches()
   }
+}
+
+/** Records every task of `sc` that ends in failure until [[close]],
+  * which waits for the running jobs and the listener bus first.
+  */
+private[graft] final class FailedTasks(sc: org.apache.spark.SparkContext) {
+  import org.apache.spark.Success
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+  private val failed = java.util.Collections.synchronizedList(
+    new java.util.ArrayList[String]())
+  private val listener = new SparkListener {
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.reason != Success) failed.add(s"stage ${e.stageId}: ${e.reason}"): Unit
+  }
+  sc.addSparkListener(listener)
+
+  def close(): Unit = {
+    while (sc.statusTracker.getActiveJobIds.nonEmpty) Thread.sleep(1)
+    org.apache.spark.graft.ListenerBusDrain.drain(sc)
+    sc.removeSparkListener(listener)
+  }
+
+  def seen: Seq[String] = failed.toArray.toSeq.map(_.toString)
 }

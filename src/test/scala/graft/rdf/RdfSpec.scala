@@ -653,7 +653,8 @@ class RdfSpec extends AnyFunSuite {
   test("triple store: a constant-predicate pattern skips cached batches") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val store = TripleStore.triples(spark, SharedSpark.sfDir)
+    // the columnar form; the shared session's store is persisted rows
+    val store = TripleStore.triples(SharedSpark.columnar, SharedSpark.sfDir)
     val df = graft.Graft.sparql(store, "SELECT ?c ?n WHERE { ?c :hasNation ?n }")
     assert(df.collect().nonEmpty)
     val scans = new AdaptiveSparkPlanHelper {}.collect(
@@ -669,7 +670,7 @@ class RdfSpec extends AnyFunSuite {
 
   test("triple store: served from a file scan, not the derivation's lineage") {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val store = TripleStore.triples(spark, SharedSpark.sfDir)
+    val store = TripleStore.triples(SharedSpark.columnar, SharedSpark.sfDir)
     // the frame every query builds on is a coalesce over the parquet
     // read-back; the derivation would be ~55 nodes of unions and
     // explodes re-analyzed by every query
@@ -685,9 +686,45 @@ class RdfSpec extends AnyFunSuite {
       s"cached buffers must not carry the build lineage: $rdds")
   }
 
+  test("triple store: the row form scans the persisted rows of a file scan") {
+    import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // the shared session's 65,095-triple store is within Regime.budget
+    val store = TripleStore.triples(spark, SharedSpark.sfDir)
+    val rows = store.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd
+      case other => fail(s"the store must be one RDD-backed leaf: $other")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.contains(rows.id),
+      "the store's rows must be persisted")
+    // join planning sees the read-back's size statistics, not the
+    // unknown size of an RDD
+    val fileBytes = TripleStore.storeDir(spark, SharedSpark.sfDir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    assert(store.queryExecution.optimizedPlan.stats.sizeInBytes == fileBytes,
+      "the rows must carry the read-back's size statistics")
+    val df = graft.Graft.sparql(store, "SELECT ?c ?n WHERE { ?c :hasNation ?n }")
+    assert(df.collect().nonEmpty)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = df.queryExecution.executedPlan
+    assert(helper.collect(plan) { case s: RDDScanExec if s.rdd eq rows => s }.size == 1,
+      "one scan of the persisted rows expected")
+    assert(helper.collect(plan) { case s: InMemoryTableScanExec => s }.isEmpty,
+      "the row form has no columnar cache scan")
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[String] =
+      r.getClass.getSimpleName +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val rdds = lineage(rows)
+    assert(rdds.last == "FileScanRDD", s"the rows must be read from the files: $rdds")
+    assert(!rdds.contains("UnionRDD") && !rdds.contains("ShuffledRowRDD"),
+      s"persisted rows must not carry the build lineage: $rdds")
+  }
+
   test("triple store: eviction drops the dimension slice and the files") {
-    // a separate session, so the shared store other suites hold stays
+    // a separate session, so the shared store other suites hold stays;
+    // gated at 0 triples, so the store is the columnar form
     val s = spark.newSession()
+    TripleStore.gateAt(s, 0)
     val dir = SharedSpark.sfDir
     val want = RdfModel.tpchTriplesSet(s, dir)
       .filter(!col("s").startsWith("line:"))
@@ -706,6 +743,27 @@ class RdfSpec extends AnyFunSuite {
     assert(!(after eq before), "the slice must be re-derived over the new store")
     assert(after.count() == want.count())
     assert(after.exceptAll(want).isEmpty && want.exceptAll(after).isEmpty)
+    TripleStore.evictTriples(s, dir)
+  }
+
+  test("triple store: eviction unpersists the row form and deletes its files") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val s = spark.newSession()
+    val dir = SharedSpark.sfDir
+    val store = TripleStore.triples(s, dir)
+    val rows = store.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    val before = TripleStore.dimensionTriples(s, dir)
+    val want = before.collect().map(_.toString).sorted.toSeq
+    assert(want.nonEmpty)
+    val files = TripleStore.storeDir(s, dir)
+    assert(files.exists && s.sparkContext.getPersistentRDDs.contains(rows.id))
+    TripleStore.evictTriples(s, dir)
+    assert(!files.exists, "eviction must delete the store's files")
+    assert(!s.sparkContext.getPersistentRDDs.contains(rows.id),
+      "eviction must unpersist the store's rows")
+    val after = TripleStore.dimensionTriples(s, dir)
+    assert(!(after eq before), "the slice must be re-derived over the new store")
+    assert(after.collect().map(_.toString).sorted.toSeq == want)
     TripleStore.evictTriples(s, dir)
   }
 
